@@ -89,36 +89,28 @@ HEADLINE = [
 def recall_gates(spark, sf_dir: str = "/root/testdata/sf0.01") -> dict:
     """Driver-visible recall of every sketch/approximate operator against its
     exact counterpart at sf0.01 (small enough that the exact computation is
-    cheap). The sketch outputs are verified subsets of the candidate space, so
-    recall = |approx| / |exact| for the pair operators and top-k overlap for ANN.
+    cheap). MinHash, LSH, IVF and PQ read their counts from the gate queries;
+    SimHash has no gate query, so its comparison lives here.
     """
     from pyspark.sql import functions as F
 
-    from entity_resolution_spark.operators.dedup import (
-        jaccard_pairs,
-        minhash_lsh_dup_pairs,
-        simhash_dup_pairs,
-    )
     from entity_resolution_spark.functions import text as TX
     from entity_resolution_spark.functions.hashing import hamming64, simhash64, simhash_fold
-    from entity_resolution_spark.operators.similarity import brute_force_topk
-    from entity_resolution_spark.queries import QUERIES as _Q
+    from entity_resolution_spark.operators.dedup import simhash_dup_pairs
+    from entity_resolution_spark.queries import lsh_ann_recall_counts
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    def ratio(hit, total):
+        return round(hit / total, 4) if total else 1.0
+
     out: dict[str, float] = {}
-
-    # MinHash-LSH vs exact 3-gram jaccard at the same verify threshold. Both
-    # paths verify with the exact jaccard on identical shingle sets, so the LSH
-    # output is a subset of the exact set and recall is a pure band-miss rate.
-    approx = minhash_lsh_dup_pairs(docs, shingle_k=3, verify_threshold=0.5)
-    exact = jaccard_pairs(docs, "doc_id", "text", block_col=None,
-                          threshold=0.5, ngram=3)
-    n_exact = exact.count()
-    n_hit = approx.join(exact.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi").count()
-    out["minhash_near_dup_recall"] = round(n_hit / n_exact, 4) if n_exact else 1.0
+    # MinHash-LSH vs exact 3-gram jaccard at the same verify threshold: the
+    # LSH output is a subset of the exact set, so recall is a band-miss rate.
+    r = QUERIES["minhash_recall_gate"](spark, sf_dir).first()
+    out["minhash_near_dup_recall"] = ratio(r["n_hit"], r["n_exact"])
 
     # SimHash banding vs exact Hamming-<=6 over all sketch pairs (the 8x8-bit
     # band schedule is complete for d < 8, so this asserts 1.0).
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     exploded = docs.select(F.col("doc_id").alias("_id"),
                            F.explode(TX.distinct_tokens(F.col("text"))).alias("_t"))
     sketch = exploded.groupBy("_id").agg(*simhash64(F.col("_t"))).select(
@@ -134,75 +126,20 @@ def recall_gates(spark, sf_dir: str = "/root/testdata/sf0.01") -> dict:
     n_hit = approx_sh.join(
         exact_sh.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi"
     ).count()
-    out["simhash_near_dup_recall"] = round(n_hit / n_exact, 4) if n_exact else 1.0
+    out["simhash_near_dup_recall"] = ratio(n_hit, n_exact)
 
     # Hyperplane-LSH ANN vs brute-force cosine top-k: per-probe overlap of the
-    # returned neighbor sets.
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    probes = emb.where(F.col("vec_id") < 20)
-    truth = brute_force_topk(emb, probes, k=5).select("probe_id", "neighbor_id")
-    # same operator + plane/table schedule the driver query runs
-    ann = _Q["lsh_ann_topk"](spark, sf_dir).select("probe_id", "neighbor_id")
-    n_truth = truth.count()
-    n_hit = ann.join(truth, ["probe_id", "neighbor_id"], "left_semi").count()
-    out["lsh_ann_topk_recall"] = round(n_hit / n_truth, 4) if n_truth else 1.0
+    # returned neighbor sets (the gate row keeps only recall >= 0.95).
+    n_truth, n_hit = lsh_ann_recall_counts(spark, sf_dir)
+    out["lsh_ann_topk_recall"] = ratio(n_hit, n_truth)
 
-    # IVF ANN on its honest regime — near-dup retrieval. The sf tables are
-    # isotropic at cosine 0.3-0.5, where ANY cell index degenerates to
-    # recall ≈ scan fraction (measured: 0.94 recall needs 55% scan); real
-    # corpora have high-cosine duplicate structure, so the gate plants it
-    # deterministically: 100 partner vectors at cosine ≈ 0.995 (5% seeded
-    # noise) are unioned into the corpus, and every original must retrieve
-    # its partner in top-5 while scanning n_probe/√N ≈ 9% of the cells.
-    import numpy as _np
-
-    from entity_resolution_spark.operators.similarity import ivf_ann_topk
-
-    base = emb.where(F.col("vec_id") < 100).collect()
-    rng = _np.random.RandomState(0xC0FFEE)
-    planted = [
-        (
-            int(r["vec_id"]) + 1_000_000,
-            [
-                float(x)
-                for x in _np.asarray(r["embedding"])
-                + 0.05
-                * _np.linalg.norm(r["embedding"])
-                / _np.sqrt(len(r["embedding"]))
-                * rng.standard_normal(len(r["embedding"]))
-            ],
-        )
-        for r in base
-    ]
-    corpus = emb.unionByName(
-        spark.createDataFrame(planted, "vec_id long, embedding array<double>")
-    )
-    ivf_probes = corpus.where(F.col("vec_id") < 100)
-    got = {
-        (r["probe_id"], r["neighbor_id"])
-        for r in ivf_ann_topk(corpus, ivf_probes, k=5, n_probe=4).collect()
-    }
-    hits = sum(1 for r in base if (r["vec_id"], r["vec_id"] + 1_000_000) in got)
-    out["ivf_ann_planted_partner_recall"] = round(hits / len(base), 4) if base else 1.0
-
-    # PQ ANN on the same planted-partner regime: every original must retrieve
-    # its cosine≈0.995 partner in top-5 through the quantized screen while
-    # reranking only `rerank` of N candidates exactly.
-    from entity_resolution_spark.operators.similarity import pq_ann_topk
-
-    got_pq = {
-        (r["probe_id"], r["neighbor_id"])
-        for r in pq_ann_topk(
-            corpus, ivf_probes, k=5, m=8, k_codes=32, rerank=64
-        ).collect()
-    }
-    hits_pq = sum(
-        1 for r in base if (r["vec_id"], r["vec_id"] + 1_000_000) in got_pq
-    )
-    out["pq_ann_planted_partner_recall"] = (
-        round(hits_pq / len(base), 4) if base else 1.0
-    )
+    # IVF and PQ ANN on planted cosine~0.995 partners: every original must
+    # retrieve its partner in top-5 (near-dup retrieval is the regime cell and
+    # quantizer indexes exist for; see queries._planted_partner_corpus).
+    for key, gate in (("ivf_ann_planted_partner_recall", "ivf_ann_recall_gate"),
+                      ("pq_ann_planted_partner_recall", "pq_ann_recall_gate")):
+        r = QUERIES[gate](spark, sf_dir).first()
+        out[key] = ratio(r["n_hit"], r["n_planted"])
     return out
 
 

@@ -67,21 +67,6 @@ class PipelineConfig:
     # corpora pay ~nothing and a boilerplate-heavy web corpus saves O(n·cap)
     # wide rows per n-copy family (pairs.drop_sha_covered_pairs).
     dedup_covered_pairs: bool = True
-    # Submit the vectors and assignments stages from two driver threads. The
-    # two subtrees are independent (both read only `features`); each runs
-    # build-time driver actions — the TF-IDF vocab census collect+save and the
-    # blocking families' eager checkpoints — that otherwise serialize.
-    # Spark's per-block cache locks make the shared `features`
-    # materialization race-free (each partition computed once; the other
-    # job's task blocks on the lock then reads the cached block), and the
-    # subtrees never interact, so results are bit-identical either way.
-    # Measured NEUTRAL on the 703k-file corpus at local[16] (min-of-3
-    # alternating: 84.4s concurrent vs 83.8s sequential): the census collect
-    # is itself a parallel job, so the truly serial driver window is only the
-    # ~1-2s np.save — there is little idle time to reclaim in local mode.
-    # Default off; turn on where driver→cluster round-trips are long (remote
-    # driver, busy scheduler) and the overlap window is real.
-    concurrent_stages: bool = False
 
 
 def extract_features(
@@ -178,7 +163,6 @@ def resolve(
     repo_files: DataFrame,
     cfg: PipelineConfig | None = None,
     store: CheckpointStore | None = None,
-    eager: bool = False,
     timings: dict | None = None,
 ) -> dict[str, DataFrame]:
     """Run the full pipeline; returns every stage DataFrame keyed by stage name.
@@ -202,8 +186,6 @@ def resolve(
             # no store: cache the stage so downstream actions don't recompute the DAG
             out = compute().persist()
             persisted.append(out)
-            if eager:
-                out.count()
         if timings is not None:
             timings[name] = round(_time.monotonic() - t0, 2)
         return out
@@ -219,28 +201,18 @@ def resolve(
     fi = features.withColumn("unique_id_str", F.col("unique_id")).withColumn(
         "unique_id", F.xxhash64("unique_id")
     )
-    vec_fn = lambda: tfidf_vectors(  # noqa: E731
+    vectors = stage("vectors", lambda: tfidf_vectors(
         fi, "unique_id", "shingles", cfg.min_df, cfg.max_df_frac,
         top_k=cfg.tfidf_top_k, persisted=persisted,
         # extract_features' Arrow tokenizer np.unique's each shingle array
         # (fast_text.py:82) → tf≡1: skip the tf shuffle and keep rows
         # doc-clustered so the vector assembly agg scales with cores
         terms_distinct=True,
+    ))
+    assignments = stage(
+        "assignments", lambda: block_assignments(fi, cfg.blocking, persisted=persisted)
     )
-    asg_fn = lambda: block_assignments(  # noqa: E731
-        fi, cfg.blocking, persisted=persisted
-    )
-    if cfg.concurrent_stages:
-        from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as _ex:
-            _fv = _ex.submit(stage, "vectors", vec_fn)
-            _fa = _ex.submit(stage, "assignments", asg_fn)
-            vectors = _fv.result()
-            assignments = _fa.result()
-    else:
-        vectors = stage("vectors", vec_fn)
-        assignments = stage("assignments", asg_fn)
     def compute_pairs():
         p = candidate_pairs(assignments)
         if cfg.dedup_covered_pairs:

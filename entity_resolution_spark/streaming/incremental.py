@@ -412,12 +412,13 @@ def explode_doc_lines(
     """(id, text[, event_time]) → (doc_id, pos, line) rows, one per
     non-empty TRIMMED line (the same line rule as
     ``operators.cleaning.corpus_line_dedup``: whitespace-only lines always
-    drop; the ORIGINAL untrimmed line is carried for reassembly).
-    Stateless projection — works identically on a stream or a batch frame."""
+    drop; the ORIGINAL untrimmed line is carried for reassembly). The id keeps
+    its type, so ties break on it as the batch rule does. Stateless
+    projection — works identically on a stream or a batch frame."""
     keep = [c for c in docs.columns if c == "event_time"]
     return (
         docs.select(
-            F.col(id_col).cast("string").alias("doc_id"),
+            F.col(id_col).alias("doc_id"),
             F.posexplode(
                 F.split(F.coalesce(F.col(text_col).cast("string"), F.lit("")), "\n")
             ).alias("pos", "line"),
@@ -438,9 +439,9 @@ def stream_line_dedup(lines_stream: DataFrame) -> DataFrame:
     minimum-(id, pos) occurrence; this gate keeps the first ARRIVAL —
     identical outputs whenever the stream replays the corpus in (id, pos)
     order (each micro-batch may be internally unordered: the group sorts by
-    (doc_id, pos) before deciding) — the batch-parity test replays exactly
-    that way. ``min_count > 2`` has no online analog (it needs future
-    occurrence counts) and stays batch-only.
+    (doc_id, pos), in the input's doc_id type, before deciding) — the
+    batch-parity test replays exactly that way. ``min_count > 2`` has no
+    online analog (it needs future occurrence counts) and stays batch-only.
 
     State: one empty-valued entry per distinct line hash, NoTimeout — the
     dedup horizon is the stream's lifetime, like the batch rule's
@@ -458,7 +459,7 @@ def stream_line_dedup(lines_stream: DataFrame) -> DataFrame:
 
     out_schema = T.StructType(
         [
-            T.StructField("doc_id", T.StringType()),
+            T.StructField("doc_id", lines_stream.schema["doc_id"].dataType),
             T.StructField("pos", T.IntegerType()),
             T.StructField("line", T.StringType()),
         ]

@@ -196,3 +196,35 @@ def test_numeric_block_col_with_nulls(spark):
         ).select("id_a", "id_b").collect()
     }
     assert exact == {(1, 2), (3, 4)} and lsh == exact
+
+
+def test_session_memo_shares_subtree_until_cleared(spark, tmp_path, monkeypatch):
+    """Within one pass, cc_jaccard_docs reuses the jaccard edge frame that
+    jaccard_pairs_docs built; clear_session_memo() forces a rebuild."""
+    from entity_resolution_spark import queries as Q
+
+    spark.createDataFrame(DOCS, SCHEMA).write.parquet(str(tmp_path / "documents.parquet"))
+    builds = {"jaccard_pairs": 0, "connected_components": 0}
+
+    def counted(name):
+        fn = getattr(Q, name)
+
+        def wrapper(*args, **kwargs):
+            builds[name] += 1
+            return fn(*args, **kwargs)
+
+        monkeypatch.setattr(Q, name, wrapper)
+
+    counted("jaccard_pairs")
+    counted("connected_components")
+    sf_dir = str(tmp_path)
+    Q.clear_session_memo()
+    pairs = Q.QUERIES["jaccard_pairs_docs"](spark, sf_dir).collect()
+    assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2), (1, 3), (2, 3)}
+    Q.QUERIES["cc_jaccard_docs"](spark, sf_dir).collect()
+    Q.QUERIES["cc_jaccard_docs"](spark, sf_dir).collect()
+    assert builds == {"jaccard_pairs": 1, "connected_components": 1}
+    Q.clear_session_memo()
+    Q.QUERIES["cc_jaccard_docs"](spark, sf_dir).collect()
+    assert builds == {"jaccard_pairs": 2, "connected_components": 2}
+    Q.clear_session_memo()

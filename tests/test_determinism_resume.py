@@ -77,28 +77,6 @@ def test_resume_reproduces_identical_clusters(spark, tmp_path):
         assert json.load(f)["stage"] == "features"
 
 
-def test_concurrent_stage_submission_identical_clusters(spark):
-    """concurrent_stages=True submits the vectors/assignments subtrees from two
-    driver threads; the subtrees never interact, so the resolved clusters must
-    be bit-identical to the sequential default (also verified at 703k files x
-    3 runs in BENCH/BASELINE.md — clusters 240113 every sample)."""
-    from entity_resolution_spark.plans.pipeline import PipelineConfig, release, resolve
-    from entity_resolution_spark.synth.generator import SynthConfig, corpus_dataframes
-
-    rf, _, _ = corpus_dataframes(spark, SynthConfig(seed=13, n_entities=25))
-    outs = []
-    for conc in (False, True):
-        out = resolve(spark, rf, PipelineConfig(concurrent_stages=conc))
-        outs.append(
-            sorted(
-                (r["unique_id"], r["cluster_rep"])
-                for r in out["clusters"].collect()
-            )
-        )
-        release(out)
-    assert outs[0] == outs[1]
-
-
 def test_iceberg_backend_parity(spark, tmp_path):
     """Config-gated Iceberg backend (north rule: "checkpointing ... to
     Iceberg"): with an Iceberg catalog configured, stage writes route through

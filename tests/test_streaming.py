@@ -463,40 +463,46 @@ def test_stream_line_dedup_batch_parity(spark, tmp_path):
         stream_line_dedup,
     )
 
-    docs = [
-        (1, "shared header\nunique a\nshared footer"),
-        (2, "shared header\nunique b\n   \nshared footer"),
-        (3, "unique c\nshared header"),
-        (4, "unique a"),  # dup of doc 1's middle line, later id
+    inputs = [
+        [
+            (1, "shared header\nunique a\nshared footer"),
+            (2, "shared header\nunique b\n   \nshared footer"),
+            (3, "unique c\nshared header"),
+            (4, "unique a"),  # dup of doc 1's middle line, later id
+        ],
+        # docs 9 and 10 share a line in one micro-batch: the numeric id breaks
+        # the tie (as a string, '10' would sort before '9')
+        [(9, "shared line\nnine"), (10, "shared line\nten")],
     ]
-    bdf = spark.createDataFrame(docs, "doc_id long, text string")
-    want = {
-        r["doc_id"]: r["clean_text"]
-        for r in corpus_line_dedup(bdf, min_count=2, keep_first=True).collect()
-    }
+    for i, docs in enumerate(inputs):
+        bdf = spark.createDataFrame(docs, "doc_id long, text string")
+        want = {
+            r["doc_id"]: r["clean_text"]
+            for r in corpus_line_dedup(bdf, min_count=2, keep_first=True).collect()
+        }
 
-    src = str(tmp_path / "lines_src")
-    explode_doc_lines(
-        bdf.withColumn("event_time", F.current_timestamp()),
-        text_col="text",
-        id_col="doc_id",
-    ).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(
-        "doc_id string, pos int, line string, event_time timestamp"
-    ).parquet(src)
-    kept = stream_line_dedup(stream)
-    q = (
-        kept.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("line_dedup_out")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got_rows = spark.sql("SELECT * FROM line_dedup_out").collect()
-    got: dict = {}
-    for r in sorted(got_rows, key=lambda r: (int(r["doc_id"]), r["pos"])):
-        got.setdefault(int(r["doc_id"]), []).append(r["line"])
-    got_text = {k: "\n".join(v) for k, v in got.items()}
-    for doc_id, clean in want.items():
-        assert got_text.get(doc_id) == clean, (doc_id, got_text.get(doc_id), clean)
+        src = str(tmp_path / f"lines_src_{i}")
+        explode_doc_lines(
+            bdf.withColumn("event_time", F.current_timestamp()),
+            text_col="text",
+            id_col="doc_id",
+        ).coalesce(1).write.parquet(src)
+        stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+        kept = stream_line_dedup(stream)
+        q = (
+            kept.writeStream.outputMode("append")
+            .format("memory")
+            .queryName(f"line_dedup_out_{i}")
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        got: dict = {}
+        for r in sorted(
+            spark.sql(f"SELECT * FROM line_dedup_out_{i}").collect(),
+            key=lambda r: (r["doc_id"], r["pos"]),
+        ):
+            got.setdefault(r["doc_id"], []).append(r["line"])
+        got_text = {k: "\n".join(v) for k, v in got.items()}
+        for doc_id, clean in want.items():
+            assert got_text.get(doc_id) == clean, (doc_id, got_text.get(doc_id), clean)

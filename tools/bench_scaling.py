@@ -38,11 +38,9 @@ n_files = repo_files.count()
 
 tm = {{}}
 t0 = time.monotonic()
-# production-shaped: one action end-to-end (eager=False) — per-stage count()
-# barriers would serialize subtrees Spark can otherwise run concurrently
-# (vectors ∥ assignments). stage_sec records where the lazy DAG actually
-# blocks (internal actions), not per-stage cost.
-out = resolve(spark, repo_files, PipelineConfig(), eager=False, timings=tm)
+# production-shaped: one action end-to-end. stage_sec records where the lazy
+# DAG actually blocks (internal actions), not per-stage cost.
+out = resolve(spark, repo_files, PipelineConfig(), timings=tm)
 n_clusters = out["clusters"].select("cluster_id").distinct().count()
 wall = time.monotonic() - t0
 print(json.dumps({{"cores": cores, "files": n_files, "wall_sec": wall,

@@ -8,54 +8,19 @@ Usage: python tools/diag_cpu_compare.py /tmp/evlog_4 /tmp/evlog_16
 
 from __future__ import annotations
 
-import json
-import os
 import sys
+
+from eventlog import iter_events, stage_scopes
 
 
 def load(evdir: str) -> dict:
-    path = max(
-        (os.path.join(evdir, f) for f in os.listdir(evdir) if not f.endswith(".inprogress")),
-        key=os.path.getmtime,
-    )
-    if os.path.isdir(path):
-        files = sorted(os.path.join(path, f) for f in os.listdir(path) if f.startswith("events_"))
-    else:
-        files = [path]
-
-    def _lines():
-        for f in files:
-            if f.endswith(".zstd"):
-                import io
-
-                import pyarrow as pa
-
-                with pa.input_stream(f, compression="zstd") as fh:
-                    yield from io.TextIOWrapper(fh, encoding="utf-8")
-            else:
-                yield from open(f)
-
     stages: dict[int, dict] = {}
     names: dict[int, str] = {}
-    for line in _lines():
-        try:
-            ev = json.loads(line)
-        except json.JSONDecodeError:
-            continue
+    for ev in iter_events(evdir):
         k = ev.get("Event")
         if k == "SparkListenerStageCompleted":
             si = ev["Stage Info"]
-            scopes = []
-            for r in si.get("RDD Info", []):
-                sc = r.get("Scope")
-                if sc:
-                    try:
-                        nm = json.loads(sc).get("name", "")
-                    except json.JSONDecodeError:
-                        nm = ""
-                    if nm and nm not in scopes:
-                        scopes.append(nm)
-            names[si["Stage ID"]] = ",".join(scopes)[:70]
+            names[si["Stage ID"]] = ",".join(stage_scopes(si))[:70]
         elif k == "SparkListenerTaskEnd":
             sid = ev["Stage ID"]
             m = ev.get("Task Metrics") or {}

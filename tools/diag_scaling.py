@@ -15,10 +15,11 @@ Usage: python tools/diag_scaling.py --cores 16 --corpus /tmp/scaling_corpus_2400
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import time
+
+from eventlog import iter_events, stage_scopes
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -51,7 +52,7 @@ def run_job(
     )
     repo_files = spark.read.parquet(corpus)
     t0 = time.monotonic()
-    out = resolve(spark, repo_files, PipelineConfig(), eager=False)
+    out = resolve(spark, repo_files, PipelineConfig())
     out["clusters"].select("cluster_id").distinct().count()
     wall = time.monotonic() - t0
     spark.stop()
@@ -59,37 +60,9 @@ def run_job(
 
 
 def parse_eventlog(evdir: str) -> dict:
-    path = max(
-        (os.path.join(evdir, f) for f in os.listdir(evdir) if not f.endswith(".inprogress")),
-        key=os.path.getmtime,
-    )
-    # Spark 4 event logs are rolling directories (eventlog_v2_*/events_*)
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f) for f in os.listdir(path) if f.startswith("events_")
-        )
-    else:
-        files = [path]
-
-    def _lines():
-        for f in files:
-            if f.endswith(".zstd"):
-                import io
-
-                import pyarrow as pa
-
-                with pa.input_stream(f, compression="zstd") as fh:
-                    yield from io.TextIOWrapper(fh, encoding="utf-8")
-            else:
-                yield from open(f)
-
     stages: dict[tuple, dict] = {}
     app_start = app_end = None
-    for line in _lines():
-        try:
-            ev = json.loads(line)
-        except json.JSONDecodeError:
-            continue
+    for ev in iter_events(evdir):
         k = ev.get("Event")
         if k == "SparkListenerApplicationStart":
             app_start = ev["Timestamp"]
@@ -109,18 +82,8 @@ def parse_eventlog(evdir: str) -> dict:
                 "",
             )
             # distinctive physical-operator scopes (python/arrow stages stand out)
-            scopes = []
-            for r in si.get("RDD Info", []):
-                sc = r.get("Scope")
-                if sc:
-                    try:
-                        nm = json.loads(sc).get("name", "")
-                    except json.JSONDecodeError:
-                        nm = ""
-                    if nm and nm not in scopes:
-                        scopes.append(nm)
             scope_s = ",".join(
-                s for s in scopes
+                s for s in stage_scopes(si)
                 if any(t in s for t in (
                     "Arrow", "Python", "Aggregate", "Join", "Window", "Scan",
                     "Checkpoint", "Generate",
