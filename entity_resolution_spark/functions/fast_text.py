@@ -48,7 +48,7 @@ _TOKEN_RE_B = re.compile(rb"[^a-z0-9_]+")
 _A = np.uint64(1099511628211)  # FNV-1a prime: polynomial rolling multiplier
 _WIDEN = np.uint64(0x9E3779B97F4A7C15)  # golden-ratio odd constant widens crc32
 
-N_MINHASH = 32  # signature width baked into the kernel (BlockingConfig.num_hashes)
+N_MINHASH = 32  # signature width baked into the kernel (blocking.NUM_HASHES)
 
 
 def _token_hashes64(toks: list) -> np.ndarray:
@@ -83,8 +83,8 @@ def _poly_windows(vals: np.ndarray, k: int) -> np.ndarray:
     """Polynomial hash of every k-window of ``vals`` (uint64, wraps mod 2^64).
 
     h_i = ((v_i·A + v_{i+1})·A + ...) — k vectorized ops over the whole array.
-    Sequences shorter than k hash as one whole-sequence window (matching
-    ``hashed_shingles``: short files still block/compare).
+    Sequences shorter than k hash as one whole-sequence window (as
+    ``text.shingles`` does: short files still block/compare).
     """
     n = len(vals)
     if n == 0:
@@ -173,7 +173,8 @@ _WS_RE_B = re.compile(rb"\s+")  # bytes twin of ws_tokens' /\s+/ (Java \s is
 
 def ws_ngram_hashes_batch(texts: pd.Series, n: int) -> pd.Series:
     """Distinct polynomial window hashes of the ws_tokens token stream —
-    the Arrow twin of ``decontamination.ngram_array`` with int64 surrogates.
+    the Arrow twin of ``array_distinct(decontamination.ngram_windows)`` with
+    int64 surrogates.
 
     Tokenizer parity contract: tokens are split(lower(text), /\\s+/) with
     empties dropped — the SAME rule as ``functions.text.ws_tokens`` (the

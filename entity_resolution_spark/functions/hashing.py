@@ -1,4 +1,4 @@
-"""Hash-based signatures: record ids, MinHash, SimHash, rolling fingerprints.
+"""Hash-based signatures: record ids, MinHash and its LSH bands, SimHash.
 
 All signatures are computed with Spark's built-in 64-bit hash functions
 (``xxhash64`` — JVM-side, whole-stage-codegen'd); seeds are varied by prefixing a
@@ -9,7 +9,7 @@ the determinism requirement the reference meets with id-seeded projections
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 ID_SEP = "\x1f"
@@ -29,40 +29,31 @@ def content_sha(col: Column | str = "content") -> Column:
     return F.sha2(c, 256)
 
 
-def long_id(col: Column | str) -> Column:
-    """64-bit surrogate of a string id, for the connected-components loop.
+def minhash_signature(exploded_value: Column, num_hashes: int) -> Column:
+    """Aggregate expression computing a MinHash signature over an exploded
+    (id, value) frame: ``array<long>`` of one ``min(xxhash64(salt_i || value))``
+    per hash function.
 
-    NOTE (scale): at 10^12 records a 64-bit surrogate has non-trivial birthday
-    collision probability; production would use the string id itself (CC works on
-    any orderable type) or a 128-bit pair. We keep longs for shuffle width and note
-    the switch is a one-line change (CC below is type-agnostic).
+    Use as: ``df.select(id, explode(shingles).alias('v')).groupBy(id).agg(expr)``.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.xxhash64(c)
+    return F.array(
+        *[F.min(F.xxhash64(F.lit(f"mh{i}"), exploded_value)) for i in range(num_hashes)]
+    )
 
 
-def minhash_signature(exploded_value: Column, num_hashes: int) -> list[Column]:
-    """Aggregate expressions computing a MinHash signature over an exploded
-    (id, value) frame: one ``min(xxhash64(salt_i || value))`` per hash function.
-
-    Use as: ``df.select(id, explode(shingles).alias('v')).groupBy(id).agg(*exprs)``.
-    """
-    return [
-        F.min(F.xxhash64(F.lit(f"mh{i}"), exploded_value)).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-
-
-def band_keys(num_hashes: int, bands: int, prefix: str = "mh_") -> list[Column]:
-    """LSH band keys from a MinHash signature laid out as columns ``mh_0..mh_{H-1}``:
-    hash of each band's row-slice. ``bands`` must divide ``num_hashes``."""
+def band_hashes(sig: str, num_hashes: int, bands: int) -> list[Column]:
+    """LSH band keys ``band_0..band_{bands-1}`` from an ``array<long>`` MinHash
+    signature column of width ``num_hashes``: one per-band seeded xxhash64 of
+    each band's row slice. ``bands`` must divide ``num_hashes``."""
     assert num_hashes % bands == 0, "bands must divide num_hashes"
     rows = num_hashes // bands
-    out = []
-    for b in range(bands):
-        cols = [F.col(f"{prefix}{b * rows + r}") for r in range(rows)]
-        out.append(F.xxhash64(F.lit(f"band{b}"), *cols).alias(f"band_{b}"))
-    return out
+    return [
+        F.xxhash64(
+            F.lit(f"band{b}"),
+            *[F.element_at(sig, b * rows + r + 1) for r in range(rows)],
+        ).alias(f"band_{b}")
+        for b in range(bands)
+    ]
 
 
 def simhash64(exploded_value: Column, weight: Column | None = None) -> Column:
@@ -99,40 +90,3 @@ def simhash_fold(prefix: str = "b") -> Column:
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit SimHashes: popcount of xor."""
     return F.bit_count(a.bitwiseXOR(b))
-
-
-def hashed_shingles(tok: Column, k: int = 5) -> Column:
-    """Sorted distinct xxhash64 of each k-token window — hashes the slice array
-    directly (no per-window string materialization). Documents shorter than k
-    tokens hash their whole token sequence, so short files still compare.
-    ``tok`` must be a bound column reference (see pipeline.extract_features on
-    HOF-lambda re-evaluation)."""
-    windows = F.transform(
-        F.sequence(F.lit(1), F.size(tok) - (k - 1)),
-        lambda i: F.xxhash64(F.slice(tok, i, k)),
-    )
-    short = F.when(F.size(tok) > 0, F.array(F.xxhash64(tok))).otherwise(
-        F.array().cast("array<bigint>")
-    )
-    return F.array_sort(
-        F.array_distinct(F.when(F.size(tok) >= k, windows).otherwise(short))
-    )
-
-
-def rolling_fingerprints(tok: Column, window: int = 8, keep_every: int = 16) -> Column:
-    """Document fingerprinting (winnowing-lite): hash every ``window``-token shingle,
-    keep hashes ≡ 0 (mod keep_every) — a deterministic content-defined sample used
-    for copy detection. Pure higher-order-function SQL.
-    """
-    windows = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(tok) - (window - 1), F.lit(1))),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(tok, i, window))),
-    )
-    return F.array_sort(F.array_distinct(F.filter(windows, lambda h: h % keep_every == 0)))
-
-
-def with_minhash(df: DataFrame, id_col: str, shingle_col: str,
-                 num_hashes: int = 32) -> DataFrame:
-    """(id, array<string> shingles) → (id, mh_0..mh_{H-1}); one explode + one groupBy."""
-    exploded = df.select(F.col(id_col), F.explode(F.col(shingle_col)).alias("_v"))
-    return exploded.groupBy(id_col).agg(*minhash_signature(F.col("_v"), num_hashes))

@@ -60,19 +60,6 @@ def shingles(tok: Column, k: int = 5) -> Column:
     )
 
 
-def distinct_shingles(col: Column | str, k: int = 5) -> Column:
-    # let-bind the tokenization via a single-element transform: passing
-    # tokens(col) straight into shingles' window lambda would re-run the
-    # regexp split once per window (HOF lambdas re-evaluate embedded child
-    # expressions per element)
-    return F.get(
-        F.transform(
-            F.array(tokens(col)), lambda tk: F.array_distinct(shingles(tk, k))
-        ),
-        0,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Text-analysis functions for a training-data pipeline (documents table).
 # ---------------------------------------------------------------------------

@@ -62,7 +62,6 @@ def tfidf_vectors(
     id_col: str = "unique_id",
     term_col: str = "shingles",
     min_df: int = 1,
-    max_df_frac: float = 1.0,
     top_k: int | None = None,
     persisted: list | None = None,
     terms_distinct: bool = False,
@@ -74,9 +73,8 @@ def tfidf_vectors(
     idf = ln((N+1)/(df+1)) + 1 (sklearn ``smooth_idf`` convention, matching the
     reference's TfidfVectorizer defaults at ``am_combiner/dataloop.py:33-36``);
     weights L2-normalized so pair cosine == dot product.
-    ``min_df``/``max_df_frac`` prune ubiquitous/rare terms (the reference's
-    ``min_df=5, max_df=0.95``) — this is also the posting-list-cap defense against
-    skewed shingles (license headers).
+    ``min_df`` prunes rare terms (the reference's ``min_df=5``); ``top_k``
+    keeps each vector's heaviest terms, renormalized.
 
     ``terms_distinct=True`` declares that each row's term array is already
     duplicate-free (the Arrow tokenizer emits ``np.unique``'d shingles —
@@ -98,7 +96,7 @@ def tfidf_vectors(
       big for a driver collect; a file-distributed vocab was tried and
       measured 3× WORSE, per-worker loads dominating): stream path — ONE
       term-partitioned window ``count(*)`` fuses the df census, the
-      min_df/max_df filter and the idf weighting into a single exchange +
+      min_df filter and the idf weighting into a single exchange +
       in-partition sort (the earlier shape here — a census exchange + a
       SHUFFLE_HASH idf join — paid three term-volume exchanges and per-task
       27.6M-entry JVM hash builds) → one repartition by doc + in-partition
@@ -138,7 +136,7 @@ def tfidf_vectors(
         )
         if persisted is not None:
             persisted.append(tf)  # caller releases once downstream is materialized
-    vocab_filtered = min_df > 1 or max_df_frac < 1.0
+    vocab_filtered = min_df > 1
     # The Arrow kernel tiers ship the vocabulary as int64 numpy arrays and
     # re-derive the int32 term ids with a bit-exact numpy replica of Spark's
     # xxhash64 over ONE little-endian long (_xxhash64_long) — both only valid
@@ -170,11 +168,10 @@ def tfidf_vectors(
             ).first()["_v"]
             run_census = approx_vocab <= 4 * mmap_vocab_rows
         if run_census:
-            df_ = tf.groupBy("_t").agg(F.count("*").alias("_df"))
-            if max_df_frac < 1.0:
-                df_ = df_.where(F.col("_df") <= int(max_df_frac * n_docs))
-            if min_df > 1:
-                df_ = df_.where(F.col("_df") >= min_df)
+            df_ = (
+                tf.groupBy("_t").agg(F.count("*").alias("_df"))
+                .where(F.col("_df") >= min_df)
+            )
             idf = df_.select(
                 "_t",
                 (
@@ -196,7 +193,7 @@ def tfidf_vectors(
             if out is not None:
                 return out
     # Big-vocab stream path: ONE term-partitioned window count fuses the df
-    # census, the min_df/max_df filter, the idf weighting and the int32
+    # census, the min_df filter, the idf weighting and the int32
     # re-hash into a single exchange + in-partition Tungsten sort — replacing
     # the previous THREE term-volume exchanges (df census with its
     # ~distinct-per-map-task partial-agg emit, the exploded probe of a
@@ -228,9 +225,7 @@ def tfidf_vectors(
     # compress far better; the idf log/multiply is re-applied after the
     # exchange, bit-identically (same JVM expression, same integer df)
     df_narrow = "int" if n_docs < (1 << 31) else "bigint"
-    pre = counted.where(
-        (F.col("_df") >= min_df) & (F.col("_df") <= int(max_df_frac * n_docs))
-    ).select(
+    pre = counted.where(F.col("_df") >= min_df).select(
         "_id",
         F.xxhash64("_t").bitwiseAND(F.lit((1 << 31) - 1)).cast("int").alias("_th"),
         *([] if terms_distinct else [F.col("_tf")]),
@@ -549,7 +544,7 @@ def _assemble_vectors_arrow(
             vterms = packed[0]          # memmap: binary-searched in place —
             vidf = packed[1]            # pages shared host-wide, never copied
         if len(vterms) == 0:
-            return  # nothing survives min_df/max_df → no vectors at all
+            return  # nothing survives min_df → no vectors at all
         for batch in batches:
             name_idx = {nm: i for i, nm in enumerate(batch.schema.names)}
             tarr = batch.column(name_idx[term_col])

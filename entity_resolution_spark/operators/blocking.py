@@ -29,46 +29,40 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from entity_resolution_spark.functions.hashing import band_keys, minhash_signature
+from entity_resolution_spark.functions.fast_text import N_MINHASH
+from entity_resolution_spark.functions.hashing import band_hashes
+
+# MinHash-LSH geometry: the Arrow tokenizer's signature width, banded with
+# rows-per-band = NUM_HASHES // BANDS. r=2 keeps catch probability high for
+# jaccard ≥ 0.3 pairs (P = 1-(1-s²)^16 ≈ 0.78 at s=0.3, 0.99 at s=0.5).
+NUM_HASHES = N_MINHASH
+BANDS = 16
+SHA_PREFIX_LEN = 12  # exact-duplicate key: sha prefix (48 bits)
+# Posting-frequency cutoff for the EXACT-VALUE families (path tokens,
+# fingerprints): a key shared by more than this many records is too common
+# to carry linking evidence (think "utils.py", license-header fingerprints)
+# and is EXCLUDED from pair generation — the block-level analog of TF-IDF
+# max_df pruning (reference max_df=0.95 / inverse_degree weighting,
+# utils/adjacency.py:61-64). Structural at scale: these key vocabularies
+# are ~fixed, so block size grows ∝ corpus and cliques grow ∝ corpus² —
+# salting alone keeps the quadratic pair mass (measured: path cliques were
+# 2.5M of 2.6M candidates on a 175k-file corpus, 10× the content families;
+# cutoff 16 → 446k candidates, pairwise F1 0.99991 vs 0.99996, match_edges
+# wall 75s → 34s). MinHash bands are exempt: a crowded band is genuine
+# mutual similarity, handled by salted caps instead.
+COMMON_KEY_MAX = 16
 
 
 @dataclass(frozen=True)
 class BlockingConfig:
-    num_hashes: int = 32
-    bands: int = 16                 # rows-per-band = num_hashes // bands; r=2 keeps
-                                    # catch probability high for jaccard ≥ 0.3 pairs
-                                    # (P = 1-(1-s²)^16 ≈ 0.78 at s=0.3, 0.99 at s=0.5)
-    sha_prefix_len: int = 12        # exact-duplicate key: sha prefix
     block_cap: int = 200            # max records per similarity block (ref: split size 1000,
                                     # large-cluster guard 400 — we default tighter)
     use_path_tokens: bool = True
     use_minhash: bool = True
     use_fingerprints: bool = True   # winnowing fingerprints — copy-detection blocker
-    # Posting-frequency cutoff for the EXACT-VALUE families (path tokens,
-    # fingerprints): a key shared by more than this many records is too common
-    # to carry linking evidence (think "utils.py", license-header fingerprints)
-    # and is EXCLUDED from pair generation — the block-level analog of TF-IDF
-    # max_df pruning (reference max_df=0.95 / inverse_degree weighting,
-    # utils/adjacency.py:61-64). Structural at scale: these key vocabularies
-    # are ~fixed, so block size grows ∝ corpus and cliques grow ∝ corpus² —
-    # salting alone keeps the quadratic pair mass (measured: path cliques were
-    # 2.5M of 2.6M candidates on a 175k-file corpus, 10× the content families;
-    # cutoff 16 → 446k candidates, pairwise F1 0.99991 vs 0.99996, match_edges
-    # wall 75s → 34s). MinHash bands are exempt: a crowded band is genuine
-    # mutual similarity, handled by salted caps instead.
-    common_key_max: int = 16
-    # How oversized similarity blocks are broken up:
-    #   "salt"         — deterministic id-hash sub-blocks (fast; may separate a
-    #                    true entity's records within that key family);
-    #   "split_by_key" — the reference CountryBlocker's recall-preserving path
-    #                    (blockers/country.py:34-65): sub-block by a secondary
-    #                    key (path tokens), ambiguous/keyless records assigned
-    #                    by argmax mean connectivity over fingerprint-evidence
-    #                    edges; residual pathological sub-blocks still salt.
-    oversize_strategy: str = "salt"
 
 
-def exact_sha_blocks(features: DataFrame, cfg: BlockingConfig) -> DataFrame:
+def exact_sha_blocks(features: DataFrame) -> DataFrame:
     """(unique_id, block_key) for exact-content duplicates: lang + content-sha prefix.
 
     Block keys across every family are int64 ``xxhash64(family, lang, value)``
@@ -84,7 +78,7 @@ def exact_sha_blocks(features: DataFrame, cfg: BlockingConfig) -> DataFrame:
     return features.select(
         "unique_id",
         F.xxhash64(
-            F.lit("sha"), "lang", F.substring("content_sha", 1, cfg.sha_prefix_len)
+            F.lit("sha"), "lang", F.substring("content_sha", 1, SHA_PREFIX_LEN)
         ).alias("block_key"),
     )
 
@@ -99,44 +93,20 @@ def path_token_blocks(features: DataFrame) -> DataFrame:
     )
 
 
-def minhash_band_blocks(features: DataFrame, cfg: BlockingConfig) -> DataFrame:
+def minhash_band_blocks(features: DataFrame) -> DataFrame:
     """MinHash-LSH band keys over content shingles.
 
-    Fast path: the Arrow tokenizer already emits the 32-slot signature per doc
-    (``fast_text.N_MINHASH`` splitmix salts min-reduced while the shingle
-    hashes are cache-hot), so band keys are a pure projection over the cached
-    features frame — no explode, no aggregation. The previous shape re-exploded
-    137.9M shingle rows and ran ``num_hashes`` JVM hash evals per row into a
-    groupBy (~300 executor-CPU-s of the blocking stage at 703k files).
-
-    Fallback (features lacking the ``minhash`` column, or a non-kernel
-    ``num_hashes``): one explode + one groupBy of H min-aggregates — map-side
-    partial aggregation keeps the shuffle at |docs|·H, not |shingles|.
+    The Arrow tokenizer already emits the ``NUM_HASHES``-slot signature per
+    doc (splitmix salts min-reduced while the shingle hashes are cache-hot),
+    so band keys are a pure projection over the cached features frame — no
+    explode, no aggregation. The earlier JVM shape re-exploded 137.9M
+    shingle rows and ran ``NUM_HASHES`` hash evals per row into a groupBy
+    (~300 executor-CPU-s of the blocking stage at 703k files).
     """
-    from entity_resolution_spark.functions.fast_text import N_MINHASH
-
-    if "minhash" in features.columns and cfg.num_hashes == N_MINHASH:
-        rows = cfg.num_hashes // cfg.bands
-        sig = features.where(F.size("minhash") == cfg.num_hashes).select(
-            "unique_id", "lang", "minhash"
-        )
-        bands = [
-            F.xxhash64(
-                F.lit(f"band{b}"),
-                *[F.element_at("minhash", b * rows + r + 1) for r in range(rows)],
-            ).alias(f"band_{b}")
-            for b in range(cfg.bands)
-        ]
-        sig = sig.select("unique_id", "lang", *bands)
-    else:
-        exploded = features.select(
-            "unique_id", "lang", F.explode("shingles").alias("_v")
-        )
-        sig = exploded.groupBy("unique_id", "lang").agg(
-            *minhash_signature(F.col("_v"), cfg.num_hashes)
-        )
-        sig = sig.select("unique_id", "lang", *band_keys(cfg.num_hashes, cfg.bands))
-    stacked = sig.select(
+    sig = features.where(F.size("minhash") == NUM_HASHES).select(
+        "unique_id", "lang", *band_hashes("minhash", NUM_HASHES, BANDS)
+    )
+    return sig.select(
         "unique_id",
         F.explode(
             F.array(
@@ -144,17 +114,16 @@ def minhash_band_blocks(features: DataFrame, cfg: BlockingConfig) -> DataFrame:
                     # band identity is already inside band_b (per-band seeded
                     # xxhash64); fold lang in and emit the int64 key directly
                     F.xxhash64(F.lit("mh"), "lang", F.col(f"band_{b}"))
-                    for b in range(cfg.bands)
+                    for b in range(BANDS)
                 ]
             )
         ).alias("block_key"),
     )
-    return stacked
 
 
 def fingerprint_blocks(features: DataFrame) -> DataFrame:
     """(unique_id, block_key) per content fingerprint (winnowing sample of shingle
-    hashes, :func:`rolling_fingerprints`). Documents sharing any unchanged region
+    hashes, ``fast_text.code_features``). Documents sharing any unchanged region
     co-block — robust to localized edits where MinHash bands can miss. The inverted
     index over fingerprints is the same exploded-equi-join shape as the reference's
     feature adjacency (``utils/adjacency.py:50-54``)."""
@@ -420,18 +389,19 @@ def block_assignments(
 ) -> DataFrame:
     """Union of all key families → capped (unique_id, block_key) assignments.
 
-    ``features`` must carry: unique_id, lang, content_sha, path_toks, shingles.
+    ``features`` must carry: unique_id, lang, content_sha, path_toks, minhash,
+    fingerprints (the :func:`plans.pipeline.extract_features` columns).
     """
     cfg = cfg or BlockingConfig()
 
     # family tag rides as a 1-byte literal column (free per-part constant):
     # 0=sha (exact; star pairs, never capped), 1=path, 2=mh, 3=fp
-    parts = [exact_sha_blocks(features, cfg).withColumn("_fam", F.lit(0).cast("byte"))]
+    parts = [exact_sha_blocks(features).withColumn("_fam", F.lit(0).cast("byte"))]
     if cfg.use_path_tokens:
         parts.append(path_token_blocks(features).withColumn("_fam", F.lit(1).cast("byte")))
     if cfg.use_minhash:
-        parts.append(minhash_band_blocks(features, cfg).withColumn("_fam", F.lit(2).cast("byte")))
-    if cfg.use_fingerprints and "fingerprints" in features.columns:
+        parts.append(minhash_band_blocks(features).withColumn("_fam", F.lit(2).cast("byte")))
+    if cfg.use_fingerprints:
         parts.append(fingerprint_blocks(features).withColumn("_fam", F.lit(3).cast("byte")))
     asg = parts[0]
     for p in parts[1:]:
@@ -452,40 +422,16 @@ def block_assignments(
     # ONE sizing pass for every policy (was three groupBy+join rounds — each
     # shuffle barrier is fixed per-query-stage latency that caps scaling):
     #   - exact-value families (path:/fp:) drop keys more common than
-    #     common_key_max (no linking evidence — block-level max_df pruning);
+    #     COMMON_KEY_MAX (no linking evidence — block-level max_df pruning);
     #   - sha: blocks pass through uncapped (their pairs are stars);
     #   - everything else over block_cap splits into salted sub-blocks.
-    # common_key_max < block_cap, so kept exact-value keys are never salted —
+    # COMMON_KEY_MAX < block_cap, so kept exact-value keys are never salted —
     # the fused CASE is exactly the old sequential semantics.
     sizes = asg.groupBy("block_key").agg(F.count("*").alias("_bs"))
     joined = asg.join(sizes.hint("shuffle_hash"), "block_key")
     is_sha = F.col("_fam") == 0
     is_exact_val = F.col("_fam").isin(1, 3)
-    if cfg.common_key_max is not None:
-        joined = joined.where(~(is_exact_val & (F.col("_bs") > cfg.common_key_max)))
-
-    if cfg.oversize_strategy == "split_by_key":
-        keep = joined.where(is_sha | (F.col("_bs") <= cfg.block_cap)).select(
-            "unique_id", "block_key", is_sha.alias("is_exact")
-        )
-        over = joined.where(~is_sha & (F.col("_bs") > cfg.block_cap)).select(
-            "unique_id", F.col("block_key").cast("string").alias("block_key")
-        ).persist()  # consumed by members-distinct, recs join and split sizing
-        split = _split_oversized_with_fingerprint_evidence(over, features, cfg)
-        # the split output is ALREADY materialized (eager localCheckpoint in
-        # split_oversized_blocks_by_key), so over's consumers have all run —
-        # release here rather than leaking it when no persisted list is passed
-        over.unpersist()
-        # recall-preserving split first; salting remains the last-resort bound
-        # on any sub-block a popular secondary key left pathological.
-        # (The split operator speaks string keys — its {block}+{key} sub-keys
-        # are the reference contract — so re-hash its output back to int64.)
-        capped = apply_block_caps(split, cfg.block_cap).select(
-            "unique_id",
-            F.xxhash64("block_key").alias("block_key"),
-            F.lit(False).alias("is_exact"),
-        )
-        return keep.unionByName(capped)
+    joined = joined.where(~(is_exact_val & (F.col("_bs") > COMMON_KEY_MAX)))
 
     n_sub = F.ceil(F.col("_bs") / F.lit(cfg.block_cap)).cast("long")
     salted = F.when(
@@ -497,42 +443,3 @@ def block_assignments(
         F.col("unique_id"), salted.alias("block_key"), is_sha.alias("is_exact")
     )
 
-
-def _split_oversized_with_fingerprint_evidence(
-    over: DataFrame, features: DataFrame, cfg: BlockingConfig
-) -> DataFrame:
-    """Oversized-block rows → CountryBlocker-style sub-blocks.
-
-    Secondary keys = path tokens (multi-valued, possibly empty — the code-domain
-    analog of the reference's extracted country codes); connectivity evidence =
-    shared winnowing fingerprints among the oversized blocks' members, with
-    crowded fingerprints dropped (same ``common_key_max`` bound as blocking, so
-    the evidence-edge count stays posting-list bounded at scale).
-    """
-    members = over.select("unique_id").distinct()
-    # mf feeds both the split-key projection and the fingerprint explode —
-    # persist so the feature-extraction subtree isn't duplicated in the plan
-    mf = features.join(members, "unique_id", "left_semi").persist()
-    recs = over.join(
-        mf.select("unique_id", F.col("path_toks").alias("split_keys")), "unique_id"
-    )
-    fpx = mf.select("unique_id", F.explode("fingerprints").alias("_fp"))
-    if cfg.common_key_max is not None:
-        rare = (
-            fpx.groupBy("_fp")
-            .agg(F.count("*").alias("_n"))
-            .where(F.col("_n") <= cfg.common_key_max)
-            .select("_fp")
-        )
-        fpx = fpx.join(rare, "_fp", "left_semi")
-    a = fpx.select(F.col("_fp"), F.col("unique_id").alias("id_a"))
-    b = fpx.select(F.col("_fp"), F.col("unique_id").alias("id_b"))
-    edges = (
-        a.join(b, "_fp")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    out = split_oversized_blocks_by_key(recs, edges, min_split_size=cfg.block_cap)
-    mf.unpersist()  # out is already materialized (localCheckpoint)
-    return out

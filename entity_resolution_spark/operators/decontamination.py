@@ -56,11 +56,6 @@ def ngram_windows(text: Column, n: int) -> Column:
     return F.get(F.transform(F.array(ws_tokens(text)), _windows), 0)
 
 
-def ngram_array(text: Column, n: int) -> Column:
-    """Row-local DISTINCT token n-grams of ``text`` (set semantics)."""
-    return F.array_distinct(ngram_windows(text, n))
-
-
 def ngram_hash_array(text: Column, n: int) -> Column:
     """Row-local DISTINCT int64 window-hash surrogates of the token n-grams,
     computed in the Arrow tokenizer kernel (``fast_text.ws_ngram_hashes``:
@@ -76,7 +71,7 @@ def ngram_hash_array(text: Column, n: int) -> Column:
     64-bit collisions — the engine's accepted id-surrogate collision class
     (~5·10⁻⁷ across a 10⁸-window corpus vs a 10⁵-ngram eval set). The
     STRING definition (documented above) remains the semantic contract;
-    ``ngram_array`` keeps it observable, and the kernel's tokenizer is
+    :func:`ngram_windows` keeps it observable, and the kernel's tokenizer is
     parity-locked to ``ws_tokens`` (see ws_ngram_hashes_batch)."""
     from entity_resolution_spark.functions.fast_text import ws_ngram_hashes
 
@@ -139,7 +134,7 @@ def eval_ngram_set(
 
 
 def contamination_counts(exploded: DataFrame, ev: DataFrame, group_cols) -> DataFrame:
-    """(group cols, ngram) ⋈ broadcast eval-with-_hit → per-group counts.
+    """(group cols, ngram) ⋈ broadcast eval n-gram set → per-group counts.
 
     The single definition of the counting rule, shared by the batch operator
     and the streaming twin. ``count()`` over a groupBy never returns NULL,
@@ -159,6 +154,10 @@ def contamination_counts(exploded: DataFrame, ev: DataFrame, group_cols) -> Data
                 "bigint kernel hashes — re-materialize the eval n-gram set "
                 "with the current ngram_hash_array kernel"
             )
+    # materialize the eval set ONCE before the checks and the join: the
+    # sentinel presence check and the broadcast join would otherwise each
+    # evaluate its subtree (explode+distinct over the eval corpus)
+    ev = F.broadcast(ev.withColumn("_hit", F.lit(1)).localCheckpoint(eager=True))
     # kernel-version check: a set persisted under an OLD bigint kernel
     # passes the dtype assert but would silently match nothing; require the
     # current kernel's sentinel row (one tiny job at plan-build time — the
@@ -206,19 +205,13 @@ def decontaminate(
     side is scanned once and its text column is pruned immediately after the
     n-gram projection.
     """
-    # materialize the eval set ONCE before handing it to the counting rule:
-    # the sentinel presence check and the broadcast join would otherwise
-    # each evaluate the explode+distinct subtree over the eval corpus
-    ev = F.broadcast(
-        eval_ngram_set(eval_docs, text_col=text_col, n=n)
-        .withColumn("_hit", F.lit(1))
-        .localCheckpoint(eager=True)
-    )
     exploded = docs.select(
         F.col(id_col).alias("_id"),
         F.explode_outer(ngram_hash_array(F.col(text_col), n)).alias("ngram"),
     )
-    return contamination_counts(exploded, ev, ["_id"]).select(
+    return contamination_counts(
+        exploded, eval_ngram_set(eval_docs, text_col=text_col, n=n), ["_id"]
+    ).select(
         F.col("_id").alias(id_col),
         "total_ngrams",
         "contaminated_ngrams",

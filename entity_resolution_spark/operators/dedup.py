@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from entity_resolution_spark.functions import text as TX
-from entity_resolution_spark.functions.hashing import band_keys, minhash_signature
+from entity_resolution_spark.functions.hashing import band_hashes, minhash_signature
 from entity_resolution_spark.functions.vectors import array_jaccard, cosine_array_cols
 from entity_resolution_spark.operators.components import connected_components
 
@@ -386,19 +386,7 @@ def minhash_lsh_dup_pairs(
         # base feeds the band subtree AND both verify probes — materialize
         # the kernel output once (same discipline as jaccard_pairs)
         base = base.localCheckpoint(eager=True)
-        assert num_hashes % bands == 0, "bands must divide num_hashes"
-        rows = num_hashes // bands
-        sig = base.where(F.size("_mh") == num_hashes).select(
-            "_id",
-            "_blk",
-            *[
-                F.xxhash64(
-                    F.lit(f"band{b}"),
-                    *[F.element_at("_mh", b * rows + r + 1) for r in range(rows)],
-                ).alias(f"band_{b}")
-                for b in range(bands)
-            ],
-        )
+        mh = base
     else:
         # two-step select: bind tokens to a column before the shingle
         # window-slide (HOF lambdas re-evaluate embedded child expressions per
@@ -412,12 +400,14 @@ def minhash_lsh_dup_pairs(
             F.array_distinct(TX.shingles(F.col("_tk"), shingle_k)).alias("_sh"),
         )
         base = base.localCheckpoint(eager=True)
-        sig = (
+        mh = (
             base.select("_id", "_blk", F.explode("_sh").alias("_v"))
             .groupBy("_id", "_blk")
-            .agg(*minhash_signature(F.col("_v"), num_hashes))
-            .select("_id", "_blk", *band_keys(num_hashes, bands))
+            .agg(minhash_signature(F.col("_v"), num_hashes).alias("_mh"))
         )
+    sig = mh.where(F.size("_mh") == num_hashes).select(
+        "_id", "_blk", *band_hashes("_mh", num_hashes, bands)
+    )
     # band-bucket key includes the block: with block_col set, candidates can
     # only form within a block (the IdentityBlocker twin of the exact path)
     stacked = sig.select(

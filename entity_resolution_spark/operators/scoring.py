@@ -177,35 +177,16 @@ def feature_boost_similarities(
     )
 
 
-def match_edges(
-    scored: DataFrame,
-    w: ScorerWeights | None = None,
-    block_sizes: DataFrame | None = None,
-) -> DataFrame:
-    """Threshold scored pairs into match edges; optional large-block threshold bump.
+def match_edges(scored: DataFrame, w: ScorerWeights | None = None) -> DataFrame:
+    """Threshold scored pairs into match edges, with the large-block bump.
 
-    ``block_sizes``: optional (unique_id, block_n) — max block size a record appears
-    in; pairs where either side sits in a block over ``large_block_size`` need a
-    score above ``threshold + large_block_bump`` (the reference's anti-
-    overcombination guard for crowded names).
+    ``scored`` carries ``block_n``: the larger block size of the pair's two
+    records (NULL = no bump), riding through the scoring kernel from
+    :func:`build_pair_features`. Pairs over ``large_block_size`` need a score
+    above ``threshold + large_block_bump`` (the reference's anti-
+    overcombination guard for crowded names) — a pure predicate, no join.
     """
     w = w or ScorerWeights()
-    th = F.lit(w.threshold)
-    if block_sizes is None and "block_n" in scored.columns:
-        # block_n rode through the scoring kernel (build_pair_features
-        # block_sizes=) — apply the bump as a pure predicate, no join
-        big = F.coalesce(F.col("block_n"), F.lit(0)) > w.large_block_size
-        th = th + F.when(big, F.lit(w.large_block_bump)).otherwise(F.lit(0.0))
-    elif block_sizes is not None:
-        bs_a = block_sizes.select(
-            F.col("unique_id").alias("id_a"), F.col("block_n").alias("_bn_a")
-        )
-        bs_b = block_sizes.select(
-            F.col("unique_id").alias("id_b"), F.col("block_n").alias("_bn_b")
-        )
-        scored = scored.join(bs_a, "id_a", "left").join(bs_b, "id_b", "left")
-        big = (
-            F.coalesce(F.greatest("_bn_a", "_bn_b"), F.lit(0)) > w.large_block_size
-        )
-        th = th + F.when(big, F.lit(w.large_block_bump)).otherwise(F.lit(0.0))
+    big = F.coalesce(F.col("block_n"), F.lit(0)) > w.large_block_size
+    th = F.lit(w.threshold) + F.when(big, F.lit(w.large_block_bump)).otherwise(F.lit(0.0))
     return scored.where(F.col("score") > th).select("id_a", "id_b", "score")

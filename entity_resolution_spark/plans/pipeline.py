@@ -29,7 +29,7 @@ from entity_resolution_spark.functions.hashing import content_sha, unique_id
 from entity_resolution_spark.functions.vectors import tfidf_vectors
 from entity_resolution_spark.operators.blocking import BlockingConfig, block_assignments
 from entity_resolution_spark.operators.components import connected_components
-from entity_resolution_spark.operators.pairs import candidate_pairs
+from entity_resolution_spark.operators.pairs import candidate_pairs, drop_sha_covered_pairs
 from entity_resolution_spark.operators.scoring import (
     ScorerWeights,
     build_pair_features,
@@ -39,34 +39,26 @@ from entity_resolution_spark.operators.scoring import (
 from entity_resolution_spark.plans.checkpoint import CheckpointStore
 
 
+# min_df=2 prunes hapax shingles from the TF-IDF vectors. df=1 terms appear
+# in exactly one document, so they contribute 0 to every pair dot product —
+# pruning is lossless for the cosine numerator and only shrinks norms/unions,
+# i.e. scores can only rise. It is also the big payload lever: the pair join
+# ships these arrays, and the hapax tail is the bulk of the vocabulary
+# (reference analog: TfidfVectorizer min_df=5, am_combiner/dataloop.py:33-36).
+MIN_DF = 2
+# Hard cap on TF-IDF vector width (top-k by weight, renormalized). The pair
+# join ships terms/weights arrays through the shuffle TWICE — unbounded
+# vectors made match_edges shuffle-payload-bound (flat 4→16 cores, BENCH
+# round 1). 128 is the largest sweep value holding the e2e F1 gate at 1.0
+# (sweep None/256/128 → 1.0, 64 → 0.9927, 32 → 0.9468; tools/debug_recall.py).
+TFIDF_TOP_K = 128
+
+
 @dataclass
 class PipelineConfig:
     shingle_k: int = 5
     blocking: BlockingConfig = field(default_factory=BlockingConfig)
     scorer: ScorerWeights = field(default_factory=ScorerWeights)
-    # min_df=2 prunes hapax shingles from the TF-IDF vectors. df=1 terms appear
-    # in exactly one document, so they contribute 0 to every pair dot product —
-    # pruning is lossless for the cosine numerator and only shrinks norms/unions,
-    # i.e. scores can only rise. It is also the big payload lever: the pair join
-    # ships these arrays, and the hapax tail is the bulk of the vocabulary
-    # (reference analog: TfidfVectorizer min_df=5, am_combiner/dataloop.py:33-36).
-    min_df: int = 2
-    max_df_frac: float = 1.0
-    # Hard cap on TF-IDF vector width (top-k by weight, renormalized). The pair
-    # join ships terms/weights arrays through the shuffle TWICE — unbounded
-    # vectors made match_edges shuffle-payload-bound (flat 4→16 cores, BENCH
-    # round 1). 128 is the largest sweep value holding the e2e F1 gate at 1.0
-    # (sweep None/256/128 → 1.0, 64 → 0.9927, 32 → 0.9468; tools/debug_recall.py).
-    tfidf_top_k: int | None = 128
-    use_splitter: bool = True        # negative-evidence: lang mismatch breaks edges
-    # Drop candidate pairs whose two sides are byte-identical duplicates —
-    # the exact family's star already carries their connectivity, so the wide
-    # vector probe + scorer pass over them is pure redundancy. The dup map
-    # costs one narrow groupBy and is sized by the actual duplicate
-    # population (empty ⇒ the filter joins are no-ops), so duplicate-free
-    # corpora pay ~nothing and a boilerplate-heavy web corpus saves O(n·cap)
-    # wide rows per n-copy family (pairs.drop_sha_covered_pairs).
-    dedup_covered_pairs: bool = True
 
 
 def extract_features(
@@ -78,11 +70,11 @@ def extract_features(
     ``am_combiner/features/frontend.py:24-43``; here each feature is a column and
     ``content`` itself is only read, never rewritten — the sha256 invariant.)
     """
-    # The tokenize → shingle → fingerprint loop is the hot visitor. The pure-JVM
-    # higher-order-function version (functions.hashing.hashed_shingles /
-    # rolling_fingerprints) evaluates interpreted lambdas per token element and
-    # measured FLAT across cores inside one local-mode JVM (~60s on 175k files
-    # at 4 AND 16 cores — PLANS.md round-2 audit). The Arrow kernel
+    # The tokenize → shingle → fingerprint loop is the hot visitor. A pure-JVM
+    # higher-order-function version (per-window slice/xxhash64 lambdas)
+    # evaluates interpreted lambdas per token element and measured FLAT across
+    # cores inside one local-mode JVM (~60s on 175k files at 4 AND 16 cores —
+    # PLANS.md round-2 audit). The Arrow kernel
     # (functions.fast_text.code_features: C-speed crc32 + vectorized numpy
     # polynomial window hashes in separate Python worker processes) computes the
     # same three columns scalably; shingles are stored HASHED (array<long>):
@@ -116,6 +108,18 @@ def extract_features(
         F.col("_cf.fingerprints").alias("fingerprints"),
         F.col("_cf.minhash").alias("minhash"),
         F.col("_cf.n_tokens").alias("n_tokens"),
+    )
+
+
+def pipeline_vectors(features: DataFrame, persisted: list | None = None) -> DataFrame:
+    """The TF-IDF vectors :func:`resolve` scores with, from
+    :func:`extract_features` output: ``MIN_DF`` vocabulary pruning, top
+    ``TFIDF_TOP_K`` terms per doc. The Arrow tokenizer ``np.unique``'s each
+    shingle array (fast_text.py:82), so tf≡1: skip the tf shuffle and keep
+    rows doc-clustered so the vector assembly agg scales with cores."""
+    return tfidf_vectors(
+        features, "unique_id", "shingles", MIN_DF,
+        top_k=TFIDF_TOP_K, persisted=persisted, terms_distinct=True,
     )
 
 
@@ -196,32 +200,25 @@ def resolve(
     # sort. Swap to an int64 surrogate for those stages (8 bytes, integer
     # compares in the sort-merge joins — measured 27% faster pair join) and map
     # back to the string id at the cluster stage. Collision risk n²/2^65 —
-    # at 10^12 records switch to the 128-bit pair (functions/hashing.long_id
-    # documents the one-line change).
+    # at 10^12 records switch to a 128-bit pair (connected components is
+    # type-agnostic, so that is a one-line change here).
     fi = features.withColumn("unique_id_str", F.col("unique_id")).withColumn(
         "unique_id", F.xxhash64("unique_id")
     )
-    vectors = stage("vectors", lambda: tfidf_vectors(
-        fi, "unique_id", "shingles", cfg.min_df, cfg.max_df_frac,
-        top_k=cfg.tfidf_top_k, persisted=persisted,
-        # extract_features' Arrow tokenizer np.unique's each shingle array
-        # (fast_text.py:82) → tf≡1: skip the tf shuffle and keep rows
-        # doc-clustered so the vector assembly agg scales with cores
-        terms_distinct=True,
-    ))
+    vectors = stage("vectors", lambda: pipeline_vectors(fi, persisted))
     assignments = stage(
         "assignments", lambda: block_assignments(fi, cfg.blocking, persisted=persisted)
     )
-
-    def compute_pairs():
-        p = candidate_pairs(assignments)
-        if cfg.dedup_covered_pairs:
-            from entity_resolution_spark.operators.pairs import drop_sha_covered_pairs
-
-            p = drop_sha_covered_pairs(p, fi)
-        return p
-
-    pairs = stage("candidate_pairs", compute_pairs)
+    # Drop candidate pairs whose two sides are byte-identical duplicates —
+    # the exact family's star already carries their connectivity, so the wide
+    # vector probe + scorer pass over them is pure redundancy. The dup map
+    # costs one narrow groupBy and is sized by the actual duplicate
+    # population (empty ⇒ the filter joins are no-ops), so duplicate-free
+    # corpora pay ~nothing and a boilerplate-heavy web corpus saves O(n·cap)
+    # wide rows per n-copy family.
+    pairs = stage(
+        "candidate_pairs", lambda: drop_sha_covered_pairs(candidate_pairs(assignments), fi)
+    )
 
     def compute_edges():
         block_sizes = bump_block_sizes(assignments, cfg)
@@ -232,13 +229,13 @@ def resolve(
         pf = build_pair_features(
             pairs, fi, vectors, persisted=persisted, block_sizes=block_sizes
         )
-        scored = logistic_score(pf, cfg.scorer)
-        if cfg.use_splitter:
-            # delete-negative-edges semantics (splitters.py): lang must agree
-            # unless content is byte-identical; null lang on either side splits
-            scored = scored.where(
-                (F.col("same_lang") == 1.0) | (F.col("exact") == 1.0)
-            )
+        # negative-evidence splitter (the reference's
+        # DeleteNegativeEdgesSplitter, am_combiner/splitters/common.py:181-216):
+        # deleting an edge before CC equals subtract-then-recluster. lang must
+        # agree unless content is byte-identical; null lang on either side splits
+        scored = logistic_score(pf, cfg.scorer).where(
+            (F.col("same_lang") == 1.0) | (F.col("exact") == 1.0)
+        )
         return match_edges(scored, cfg.scorer)
 
     edges = stage("match_edges", compute_edges)

@@ -389,14 +389,13 @@ def stream_decontaminate(
         ngram_hash_array,
     )
 
-    ev = F.broadcast(eval_ngrams.withColumn("_hit", F.lit(1)))
     exploded = docs_stream.withWatermark("event_time", watermark).select(
         F.col(id_col).alias("_id"),
         "event_time",
         F.explode_outer(ngram_hash_array(F.col(text_col), n)).alias("ngram"),
     )
     return contamination_counts(
-        exploded, ev, [F.window("event_time", window).alias("w"), F.col("_id")]
+        exploded, eval_ngrams, [F.window("event_time", window).alias("w"), F.col("_id")]
     ).select(
         F.col("_id").alias(id_col),
         "total_ngrams",

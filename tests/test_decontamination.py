@@ -92,14 +92,12 @@ def test_stale_eval_set_fails_loudly(spark):
         F.col("unique_id").alias("_id"),
         F.explode_outer(ngram_hash_array(F.col("content"), 3)).alias("ngram"),
     )
-    stale = spark.createDataFrame([(12345,), (67890,)], "ngram bigint").withColumn(
-        "_hit", F.lit(1)
-    )
+    stale = spark.createDataFrame([(12345,), (67890,)], "ngram bigint")
     with pytest.raises(ValueError, match="kernel-version sentinel"):
         contamination_counts(exploded, stale, ["_id"])
 
     # a fresh set containing ONLY the sentinel yields zero contamination
-    ev = eval_ngram_set(_docs(spark, []), n=3).withColumn("_hit", F.lit(1))
+    ev = eval_ngram_set(_docs(spark, []), n=3)
     assert ev.count() == 1  # just the sentinel
     out = contamination_counts(exploded, ev, ["_id"]).collect()
     assert out[0]["contaminated_ngrams"] == 0 and not out[0]["is_contaminated"]

@@ -135,14 +135,13 @@ def test_logistic_score_monotone_and_exact_dominates(spark):
 
 def test_large_block_threshold_bump(spark):
     w = ScorerWeights(threshold=0.5, large_block_bump=0.3, large_block_size=10)
+    # block_n = the larger block size of the pair's records, as it rides
+    # through the scoring kernel (build_pair_features block_sizes=)
     scored = spark.createDataFrame(
-        [("a", "b", 0.6), ("c", "d", 0.6)],
-        "id_a string, id_b string, score double",
+        [("a", "b", 0.6, 100), ("c", "d", 0.6, 2)],
+        "id_a string, id_b string, score double, block_n long",
     )
-    sizes = spark.createDataFrame(
-        [("a", 100), ("b", 100), ("c", 2), ("d", 2)], "unique_id string, block_n long"
-    )
-    kept = {(r["id_a"], r["id_b"]) for r in match_edges(scored, w, sizes).collect()}
+    kept = {(r["id_a"], r["id_b"]) for r in match_edges(scored, w).collect()}
     assert kept == {("c", "d")}   # big-block pair needs > 0.8 now
 
 
@@ -255,14 +254,14 @@ def test_tfidf_physical_strategy_parity(spark):
     # broadcast gate wide open -> broadcast kernel
     bcast = snap(
         tfidf_vectors(
-            docs, "unique_id", "toks", min_df=2, max_df_frac=0.9, top_k=16,
+            docs, "unique_id", "toks", min_df=2, top_k=16,
             terms_distinct=True, broadcast_vocab_rows=10**9,
         )
     )
     # broadcast gate shut, mmap gate open -> file-backed (addFile/memmap) kernel
     mmapped = snap(
         tfidf_vectors(
-            docs, "unique_id", "toks", min_df=2, max_df_frac=0.9, top_k=16,
+            docs, "unique_id", "toks", min_df=2, top_k=16,
             terms_distinct=True, broadcast_vocab_rows=0,
             mmap_vocab_rows=10**9,
         )
@@ -271,7 +270,7 @@ def test_tfidf_physical_strategy_parity(spark):
     # both kernel gates shut -> fused term-stream kernel
     fused = snap(
         tfidf_vectors(
-            docs, "unique_id", "toks", min_df=2, max_df_frac=0.9, top_k=16,
+            docs, "unique_id", "toks", min_df=2, top_k=16,
             terms_distinct=True, broadcast_vocab_rows=0, mmap_vocab_rows=0,
         )
     )
@@ -280,7 +279,7 @@ def test_tfidf_physical_strategy_parity(spark):
     # duplicate-free, so tf==1 and the output is identical
     tf_path = snap(
         tfidf_vectors(
-            docs, "unique_id", "toks", min_df=2, max_df_frac=0.9, top_k=16,
+            docs, "unique_id", "toks", min_df=2, top_k=16,
             terms_distinct=False, broadcast_vocab_rows=0, mmap_vocab_rows=0,
         )
     )

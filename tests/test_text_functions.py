@@ -6,7 +6,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from entity_resolution_spark.functions import text as TX
-from entity_resolution_spark.functions.hashing import rolling_fingerprints
 
 
 def one(spark, text, col):
@@ -54,10 +53,15 @@ def test_path_functions(spark):
 
 
 def test_fingerprints_deterministic_subset(spark):
-    df = spark.createDataFrame([(["w%d" % i for i in range(60)],)], "tk array<string>")
-    fp1 = df.select(rolling_fingerprints(F.col("tk")).alias("f")).collect()[0]["f"]
-    fp2 = df.select(rolling_fingerprints(F.col("tk")).alias("f")).collect()[0]["f"]
-    assert fp1 == fp2
+    """The winnowing fingerprints of the Arrow tokenizer (the column blocking
+    keys on) are deterministic and keep only hashes ≡ 0 (mod 16)."""
+    from entity_resolution_spark.functions.fast_text import code_features
+
+    text = " ".join("w%d" % i for i in range(400))
+    df = spark.createDataFrame([(text,)], "t string")
+    fp1 = df.select(code_features(F.col("t"))["fingerprints"].alias("f")).collect()[0]["f"]
+    fp2 = df.select(code_features(F.col("t"))["fingerprints"].alias("f")).collect()[0]["f"]
+    assert fp1 and fp1 == fp2
     assert all(h % 16 == 0 for h in fp1)
 
 

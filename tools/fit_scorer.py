@@ -23,15 +23,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from entity_resolution_spark.functions.vectors import tfidf_vectors  # noqa: E402
-from entity_resolution_spark.operators.blocking import block_assignments  # noqa: E402
-from entity_resolution_spark.operators.pairs import candidate_pairs  # noqa: E402
 from entity_resolution_spark.operators.scoring import (  # noqa: E402
     PAIR_FEATURES,
     ScorerWeights,
     build_pair_features,
 )
-from entity_resolution_spark.plans.pipeline import PipelineConfig, extract_features  # noqa: E402
+from entity_resolution_spark.plans.pipeline import (  # noqa: E402
+    PipelineConfig,
+    extract_features,
+    pipeline_vectors,
+)
 from entity_resolution_spark.session import get_spark  # noqa: E402
 from entity_resolution_spark.synth.generator import SynthConfig, corpus_dataframes  # noqa: E402
 
@@ -72,7 +73,7 @@ def main() -> int:
     rf, gt, lp = corpus_dataframes(spark, SynthConfig(seed=args.seed, n_entities=args.entities))
     cfg = PipelineConfig()
     feats = extract_features(rf, cfg).persist()
-    vec = tfidf_vectors(feats, "unique_id", "shingles")
+    vec = pipeline_vectors(feats)
 
     # train on ALL labeled pairs (the exhaustive within-block pairs include the
     # cross-entity negatives that blocking correctly never co-blocks)

@@ -14,10 +14,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from entity_resolution_spark.functions.strings import jaro_winkler_udf, levenshtein_sim  # noqa: E402
-from entity_resolution_spark.functions.vectors import cosine_jaccard_udf, tfidf_vectors  # noqa: E402
+from entity_resolution_spark.functions.vectors import cosine_jaccard_udf  # noqa: E402
 from entity_resolution_spark.operators.blocking import block_assignments  # noqa: E402
 from entity_resolution_spark.operators.pairs import candidate_pairs  # noqa: E402
-from entity_resolution_spark.plans.pipeline import PipelineConfig, extract_features  # noqa: E402
+from entity_resolution_spark.plans.pipeline import (  # noqa: E402
+    PipelineConfig,
+    extract_features,
+    pipeline_vectors,
+)
 from entity_resolution_spark.session import get_spark  # noqa: E402
 
 
@@ -36,7 +40,7 @@ def main() -> int:
 
     feats = extract_features(rf, cfg).persist()
     t("warm_features", lambda: feats.count())
-    vec = tfidf_vectors(feats, "unique_id", "shingles").persist()
+    vec = pipeline_vectors(feats).persist()
     t("warm_vectors", lambda: vec.count())
     asg = block_assignments(feats, cfg.blocking).persist()
     t("warm_assignments", lambda: asg.count())
