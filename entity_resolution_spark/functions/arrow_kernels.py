@@ -1,8 +1,9 @@
 """Zero-copy Arrow kernels for the pair-scoring hot path.
 
-The pandas-UDF route materializes every list column as a numpy *object* array
-(one small ndarray per row), so each batch pays a Python-loop explode plus two
-sort-based ``np.unique``/``np.intersect1d`` passes — measured 192 µs/pair.
+The pandas-UDF route this replaced materialized every list column as a numpy
+*object* array (one small ndarray per row), so each batch paid a Python-loop
+explode plus two sort-based ``np.unique``/``np.intersect1d`` passes — measured
+192 µs/pair.
 ``mapInArrow`` hands the kernel the raw Arrow ``ListArray`` buffers instead:
 ``list_flatten`` exposes the flat values/offsets with no per-row Python, and
 because term ids are sorted 31-bit ints *within* each row while row indices
@@ -49,15 +50,24 @@ def _flat_lists(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _sorted_keys(rows: np.ndarray, terms: np.ndarray, weights: np.ndarray):
-    """Composite keys row·2³¹+term, sorted (no-op when already ordered)."""
+    """Composite keys row·2³¹+term, strictly increasing → (rows, keys, weights).
+
+    The TF-IDF producers emit each row's term ids unique and ascending, so
+    their keys pass through untouched. Any other input (unsorted, or a term id
+    repeated within a row) is sorted and equal keys MERGE by summing their
+    weights — the engine's collided-term rule (``vectors._assemble_group_flat``)
+    — so the intersect and the distinct-term counts see one key per term."""
     keys = rows * _ROW_SHIFT + terms.astype(np.int64)
     if len(keys) > 1 and not (np.diff(keys) > 0).all():
-        # inputs not strictly sorted/distinct within rows (non-tfidf caller):
-        # stable sort restores the contract
         order = np.argsort(keys, kind="stable")
-        keys = keys[order]
-        weights = weights[order]
-    return keys, weights
+        keys, weights = keys[order], weights[order]
+        first = np.empty(len(keys), dtype=bool)
+        first[0] = True
+        np.not_equal(keys[1:], keys[:-1], out=first[1:])
+        starts = np.nonzero(first)[0]
+        keys, weights = keys[starts], np.add.reduceat(weights, starts)
+        rows = keys // _ROW_SHIFT
+    return rows, keys, weights
 
 
 def _score_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
@@ -71,12 +81,10 @@ def _score_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     rb, terms_b = _flat_lists(col("terms_b"))
     _, wa = _flat_lists(col("weights_a"))
     _, wb = _flat_lists(col("weights_b"))
-    na = np.bincount(ra, minlength=n).astype(np.float64)
-    nb = np.bincount(rb, minlength=n).astype(np.float64)
 
     if len(terms_a) and len(terms_b):
-        ka, wa = _sorted_keys(ra, terms_a, wa.astype(np.float64))
-        kb, wb = _sorted_keys(rb, terms_b, wb.astype(np.float64))
+        ra, ka, wa = _sorted_keys(ra, terms_a, wa.astype(np.float64))
+        rb, kb, wb = _sorted_keys(rb, terms_b, wb.astype(np.float64))
         # both key arrays sorted → binary-search intersect, no sorting pass
         idx = np.searchsorted(kb, ka)
         idx_c = np.minimum(idx, len(kb) - 1)
@@ -88,6 +96,8 @@ def _score_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     else:
         dots = np.zeros(n, np.float64)
         shared = np.zeros(n, np.float64)
+    na = np.bincount(ra, minlength=n).astype(np.float64)
+    nb = np.bincount(rb, minlength=n).astype(np.float64)
     union = na + nb - shared
     jac = np.divide(shared, union, out=np.zeros(n, np.float64), where=union > 0)
 

@@ -1,4 +1,4 @@
-"""Hash-based signatures: record ids, MinHash and its LSH bands, SimHash.
+"""Hash-based signatures: record ids, MinHash LSH band keys, SimHash.
 
 All signatures are computed with Spark's built-in 64-bit hash functions
 (``xxhash64`` — JVM-side, whole-stage-codegen'd); seeds are varied by prefixing a
@@ -27,18 +27,6 @@ def content_sha(col: Column | str = "content") -> Column:
     """The per-row integrity invariant: sha256 of the untouched content column."""
     c = F.col(col) if isinstance(col, str) else col
     return F.sha2(c, 256)
-
-
-def minhash_signature(exploded_value: Column, num_hashes: int) -> Column:
-    """Aggregate expression computing a MinHash signature over an exploded
-    (id, value) frame: ``array<long>`` of one ``min(xxhash64(salt_i || value))``
-    per hash function.
-
-    Use as: ``df.select(id, explode(shingles).alias('v')).groupBy(id).agg(expr)``.
-    """
-    return F.array(
-        *[F.min(F.xxhash64(F.lit(f"mh{i}"), exploded_value)) for i in range(num_hashes)]
-    )
 
 
 def band_hashes(sig: str, num_hashes: int, bands: int) -> list[Column]:

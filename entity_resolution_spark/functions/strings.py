@@ -1,8 +1,9 @@
 """Batched string-similarity UDFs (the Arrow slow-path, used only on short strings).
 
 Levenshtein is a Spark built-in (`F.levenshtein`) and stays JVM-side; Jaro-Winkler has
-no built-in, so it is a pandas UDF over Arrow batches — called only on path *stems*
-(short strings), never on content. Mirrors the reference's pairwise string features
+no built-in, so the pair-scoring Arrow kernel (``arrow_kernels.score_pair_batches``)
+calls :func:`jaro_winkler_py` inline — only on path *stems* (short strings), never on
+content. Mirrors the reference's pairwise string features
 fed to its classifier (``am_combiner/combiners/ml.py:274-345``).
 """
 
@@ -59,13 +60,6 @@ def jaro_winkler_py(s1: str, s2: str, scaling: float = 0.1) -> float:
             break
         prefix += 1
     return j + prefix * scaling * (1 - j)
-
-
-@F.pandas_udf(DoubleType())
-def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    av = a.fillna("").to_numpy()
-    bv = b.fillna("").to_numpy()
-    return pd.Series([jaro_winkler_py(x, y) for x, y in zip(av, bv)])
 
 
 def levenshtein_sim(a: Column, b: Column) -> Column:

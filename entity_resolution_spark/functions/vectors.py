@@ -2,9 +2,10 @@
 
 The reference stacks per-record scipy csr rows and calls sklearn
 ``cosine_similarity`` block-locally (``am_combiner/combiners/tfidf.py:199-217``);
-here the TF-IDF weighting is a pure DataFrame computation (explode → tf, df, idf —
-all JVM aggregations) and the per-pair cosine is a batched Arrow UDF doing a
-C-level ``np.intersect1d`` merge of the two sorted term arrays (no per-row Python
+here the TF-IDF weighting is a DataFrame computation (df census and idf in the
+JVM, per-doc assembly in one Arrow kernel) and the per-pair cosine is the
+``mapInArrow`` kernel ``arrow_kernels.score_pair_batches``, one binary-search
+intersect of the two sorted term arrays per batch (no per-row Python
 interpretation of vector elements).
 
 Vectors are stored as two parallel sorted arrays per record:
@@ -19,7 +20,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.types import DoubleType
+
+# Vocabulary-size gates of tfidf_vectors' physical tiers: a driver broadcast up
+# to a few million terms, the host-shared mmap file beyond that (the ~700k-file
+# corpus's 27.6M terms), the term-partitioned stream past both.
+BROADCAST_VOCAB_ROWS = 4_000_000
+MMAP_VOCAB_ROWS = 50_000_000
 
 
 def typed_feature_tokens(
@@ -65,8 +71,6 @@ def tfidf_vectors(
     top_k: int | None = None,
     persisted: list | None = None,
     terms_distinct: bool = False,
-    broadcast_vocab_rows: int = 4_000_000,
-    mmap_vocab_rows: int = 50_000_000,
 ) -> DataFrame:
     """(id, array terms) → (id, terms array<int>, weights array<float>).
 
@@ -84,7 +88,7 @@ def tfidf_vectors(
     Physical strategy (both produce identical output — same weights, same
     xxhash64-derived int32 term ids, same tie rules):
 
-    - **vocab ≤ broadcast_vocab_rows**: per-doc assembly is ONE Arrow kernel
+    - **vocab ≤ BROADCAST_VOCAB_ROWS**: per-doc assembly is ONE Arrow kernel
       over the docs frame with the (term → idf) vocabulary broadcast as two
       numpy arrays — no explode, no join, no ``collect_list``. The JVM shape it
       replaces spent 540 executor-CPU-s (38% of the job) in ObjectHashAggregate
@@ -160,13 +164,13 @@ def tfidf_vectors(
         #    raw distinct bounds survival tighter than occurrences on
         #    repeat-heavy corpora. Clearly-over corpora stream with zero
         #    probe passes.
-        if n_occurrences <= 4 * mmap_vocab_rows:
+        if n_occurrences <= 4 * MMAP_VOCAB_ROWS:
             run_census = True
         else:
             approx_vocab = tf.agg(
                 F.approx_count_distinct("_t", rsd=0.05).alias("_v")
             ).first()["_v"]
-            run_census = approx_vocab <= 4 * mmap_vocab_rows
+            run_census = approx_vocab <= 4 * MMAP_VOCAB_ROWS
         if run_census:
             df_ = (
                 tf.groupBy("_t").agg(F.count("*").alias("_df"))
@@ -180,11 +184,11 @@ def tfidf_vectors(
             ).persist()
             n_vocab = idf.count()
             out = None
-            if n_vocab <= broadcast_vocab_rows:
+            if n_vocab <= BROADCAST_VOCAB_ROWS:
                 out = _assemble_vectors_arrow(
                     docs, id_col, term_col, idf, top_k, terms_distinct
                 )
-            elif n_vocab <= mmap_vocab_rows:
+            elif n_vocab <= MMAP_VOCAB_ROWS:
                 out = _assemble_vectors_arrow(
                     docs, id_col, term_col, idf, top_k, terms_distinct,
                     via_file=True, persisted=persisted,
@@ -336,10 +340,12 @@ def _assemble_group_flat(gids: np.ndarray, th: np.ndarray, w: np.ndarray, k_cap)
     desc, hash desc) over the merged entries; L2 norm over the kept top-k;
     output sorted by (hash asc).
 
-    The implementation packs (group, hash) into one int64 for a single
-    radix-friendly ``argsort`` (0.7 s vs 7.1 s for the 3-key lexsort it
-    replaces on an 8.6M-row partition), and the top-k ordering is computed
-    only over rows of groups that actually EXCEED ``k_cap``.
+    Group keys are batch-local ordinals — the kernel's row indices, the
+    stream path's per-flush run codes — so they stay below 2³¹ and (group,
+    hash) packs into one int64 for a single radix-friendly ``argsort`` (0.7 s
+    vs 7.1 s for the 3-key lexsort it replaces on an 8.6M-row partition); the
+    top-k ordering is computed only over rows of groups that actually EXCEED
+    ``k_cap``.
     """
     n = len(gids)
 
@@ -362,18 +368,9 @@ def _assemble_group_flat(gids: np.ndarray, th: np.ndarray, w: np.ndarray, k_cap)
 
     # 1. one packed-key sort to (group, hash) order; collided runs merge by
     #    summing weights. The sort doubles as the output (hash asc) ordering.
-    if int(gids[-1]) < (1 << 31):
-        key = (gids << np.int64(31)) | th
-        o = np.argsort(key, kind="stable")
-        new = _firsts(key[o])
-    else:
-        # group ids beyond 31 bits (not reachable from the Arrow kernels,
-        # whose ids are batch-local ordinals): full-precision ordering
-        o = np.lexsort((th, gids))
-        g_o, th_o = gids[o], th[o]
-        new = np.empty(n, dtype=bool)
-        new[0] = True
-        new[1:] = (g_o[1:] != g_o[:-1]) | (th_o[1:] != th_o[:-1])
+    key = (gids << np.int64(31)) | th
+    o = np.argsort(key, kind="stable")
+    new = _firsts(key[o])
     g, th, w = gids[o], th[o], w[o]
     starts = np.nonzero(new)[0]
     if len(starts) != n:
@@ -476,7 +473,7 @@ def _assemble_vectors_arrow(
       variant measured 3× worse precisely because each worker re-decoded it,
       PLANS.md round-3). This tier replaces the stream path's doc re-exchange
       + in-partition sort — the measured 2.6× CPU-inflation stage at 16
-      cores — for vocabularies up to ``mmap_vocab_rows`` (50M ≈ 800 MB, far
+      cores — for vocabularies up to ``MMAP_VOCAB_ROWS`` (50M ≈ 800 MB, far
       beyond any driver broadcast, still trivial for an executor host).
       True-100TB vocabularies (10^9+ terms) stay on the stream path.
     """
@@ -621,128 +618,6 @@ def _assemble_vectors_arrow(
             )
 
     return docs.select(id_col, term_col).mapInArrow(kernel, out_schema)
-
-
-def _explode_batch(ts: pd.Series, ws: pd.Series):
-    """Series-of-arrays → flat (row_idx, term, weight) numpy triple for one batch."""
-    vals = ts.to_numpy()
-    lens = np.fromiter(
-        (0 if v is None else len(v) for v in vals), dtype=np.int64, count=len(vals)
-    )
-    rows = np.repeat(np.arange(len(vals), dtype=np.int64), lens)
-    if lens.sum() == 0:
-        return rows, np.empty(0, np.int64), np.empty(0, np.float64)
-    terms = np.concatenate(
-        [np.asarray(v, dtype=np.int64) for v in vals if v is not None and len(v)]
-    )
-    wvals = ws.to_numpy()
-    weights = np.concatenate(
-        [np.asarray(v, dtype=np.float64) for v in wvals if v is not None and len(v)]
-    )
-    return rows, terms, weights
-
-
-def _merge_keys_sum_weight(keys: np.ndarray, weights: np.ndarray):
-    """Sort (key, weight) and MERGE equal-key runs by summing their weights —
-    the engine's canonical collided-term rule (``_assemble_group_flat``'s
-    hashing-vectorizer merge) applied at the pair kernel's door, so
-    ``np.intersect1d(assume_unique=True)`` sees genuinely unique keys even
-    when a caller's arrays carry within-row duplicate term ids."""
-    if len(keys) < 2:
-        return keys, weights
-    o = np.argsort(keys, kind="stable")
-    keys, weights = keys[o], weights[o]
-    first = np.empty(len(keys), dtype=bool)
-    first[0] = True
-    np.not_equal(keys[1:], keys[:-1], out=first[1:])
-    if first.all():
-        return keys, weights
-    starts = np.nonzero(first)[0]
-    return keys[starts], np.add.reduceat(weights, starts)
-
-
-def _batch_cosine_jaccard(
-    ta: pd.Series, wa: pd.Series, tb: pd.Series, wb: pd.Series
-) -> tuple[np.ndarray, np.ndarray]:
-    """Batch-vectorized cosine AND jaccard over parallel term/weight arrays.
-
-    Both sides of the whole Arrow batch are flattened to (row, term, weight)
-    triples; terms are re-coded to dense ints with one ``np.unique`` over both
-    sides, so each (row, term) becomes a single int64 composite key and the
-    whole batch intersects with ONE sorted ``np.intersect1d`` (C-level, with
-    ``return_indices`` recovering the weights). Per-row dot products and
-    shared-term counts come from two ``np.bincount`` calls — no per-row Python.
-    (Measured 1.65× faster than the previous pandas hash-merge on 2.6M pairs,
-    which itself was ~30× faster than a per-pair intersect loop.)
-    jaccard = |∩| / (|A| + |B| - |∩|) over the distinct term sets.
-    Deterministic: per-row accumulation follows sorted composite-key order.
-    """
-    n = len(ta)
-    if n == 0:
-        return np.empty(0, np.float64), np.empty(0, np.float64)
-    ra, terms_a, weights_a = _explode_batch(ta, wa)
-    rb, terms_b, weights_b = _explode_batch(tb, wb)
-    if not len(terms_a) or not len(terms_b):
-        return np.zeros(n, np.float64), np.zeros(n, np.float64)
-    allt = np.concatenate([terms_a, terms_b])
-    uniq, codes = np.unique(allt, return_inverse=True)
-    ca = codes[: len(terms_a)]
-    cb = codes[len(terms_a):]
-    m = len(uniq)
-    # composite key fits int64: row < 2^20 (Arrow batch), m < 2^40
-    ka, weights_a = _merge_keys_sum_weight(ra * m + ca, weights_a)
-    kb, weights_b = _merge_keys_sum_weight(rb * m + cb, weights_b)
-    # distinct-set sizes AFTER the merge so jaccard's union stays consistent
-    # with the merged intersection
-    na = np.bincount(ka // m, minlength=n).astype(np.float64)
-    nb = np.bincount(kb // m, minlength=n).astype(np.float64)
-    # keys are now genuinely unique per (row, term): the assume_unique
-    # contract holds even for callers whose term arrays carry within-row
-    # duplicates (e.g. two distinct terms collided to one 31-bit id — the
-    # ADVICE/VERDICT r3 hazard; tfidf_vectors' assembler already merges
-    # those by summing, and the merge here applies the SAME rule)
-    common, ia, ib = np.intersect1d(ka, kb, assume_unique=True, return_indices=True)
-    mr = common // m
-    prod = weights_a[ia] * weights_b[ib]
-    dots = np.bincount(mr, weights=prod, minlength=n)[:n]
-    shared = np.bincount(mr, minlength=n)[:n].astype(np.float64)
-    union = na[:n] + nb[:n] - shared
-    jac = np.divide(shared, union, out=np.zeros(n, np.float64), where=union > 0)
-    return dots, jac
-
-
-@F.pandas_udf(DoubleType())
-def cosine_sorted_udf(
-    ta: pd.Series, wa: pd.Series, tb: pd.Series, wb: pd.Series
-) -> pd.Series:
-    """Cosine of two L2-normalized sparse vectors (see _batch_cosine_jaccard)."""
-    dots, _ = _batch_cosine_jaccard(ta, wa, tb, wb)
-    return pd.Series(dots)
-
-
-def _cosine_jaccard_fn(
-    ta: pd.Series, wa: pd.Series, tb: pd.Series, wb: pd.Series
-) -> pd.DataFrame:
-    dots, jac = _batch_cosine_jaccard(ta, wa, tb, wb)
-    return pd.DataFrame({"cosine": dots, "jaccard": jac})
-
-
-_cosine_jaccard_udf_cache = None
-
-
-def cosine_jaccard_udf(*cols):
-    """Struct(cosine, jaccard) in one pass — the pair-scoring hot path uses this so
-    the raw shingle arrays never enter the pair join (terms == hashed shingles).
-
-    Built lazily: a struct-returning pandas_udf parses its DDL schema against the
-    active SparkSession, so the decorator can't run at import time.
-    """
-    global _cosine_jaccard_udf_cache
-    if _cosine_jaccard_udf_cache is None:
-        _cosine_jaccard_udf_cache = F.pandas_udf("cosine double, jaccard double")(
-            _cosine_jaccard_fn
-        )
-    return _cosine_jaccard_udf_cache(*cols)
 
 
 def array_jaccard(a: Column, b: Column) -> Column:

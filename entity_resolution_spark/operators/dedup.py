@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from entity_resolution_spark.functions import text as TX
-from entity_resolution_spark.functions.hashing import band_hashes, minhash_signature
+from entity_resolution_spark.functions.hashing import band_hashes
 from entity_resolution_spark.functions.vectors import array_jaccard, cosine_array_cols
 from entity_resolution_spark.operators.components import connected_components
 
@@ -257,8 +257,6 @@ def minhash_dup_clusters(
     text_col: str = "text",
     threshold: float = 0.8,
     shingle_k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
     band_cap: int = 256,
     block_col: str | None = None,
 ) -> DataFrame:
@@ -284,8 +282,7 @@ def minhash_dup_clusters(
     """
     pairs = minhash_lsh_dup_pairs(
         docs, id_col=id_col, text_col=text_col, shingle_k=shingle_k,
-        num_hashes=num_hashes, bands=bands, verify_threshold=threshold,
-        band_cap=band_cap, block_col=block_col,
+        verify_threshold=threshold, band_cap=band_cap, block_col=block_col,
     )
     vertices = docs.select(F.col(id_col).alias("id"))
     labels = connected_components(
@@ -344,8 +341,6 @@ def minhash_lsh_dup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
     verify_threshold: float = 0.5,
     band_cap: int = 256,
     block_col: str | None = None,
@@ -358,55 +353,34 @@ def minhash_lsh_dup_pairs(
     the band schedule: P(miss) = (1-s^r)^b). Buckets over ``band_cap`` members
     star-represent instead of going clique-quadratic (see ``_band_candidates``).
 
-    Signature path: at the kernel width (``num_hashes == fast_text.N_MINHASH``)
-    the Arrow tokenizer computes distinct hashed shingles AND the MinHash
-    signature in ONE pass per doc — no explode, no aggregation (the
-    ``minhash_band_blocks`` discipline). The previous exploded-JVM shape ran
-    ``num_hashes`` xxhash64 evals per shingle row — 3.4B evals on a 700k-file
-    corpus, 68% of the corpus-prep job's wall and an AGGREGATE_OUT_OF_MEMORY
-    under an 8 GiB heap. Shingle jaccard over the kernel's hashed windows
-    equals string-shingle jaccard up to 64-bit collisions (the id-surrogate
-    collision class the engine already accepts); the same tokenizer regex
-    backs both paths. Non-kernel widths keep the exploded fallback.
+    Signature: the Arrow tokenizer computes distinct hashed shingles AND the
+    ``blocking.NUM_HASHES``-slot MinHash signature (banded ``blocking.BANDS``
+    ways, the same schedule as the ER blocker) in ONE pass per doc — no
+    explode, no aggregation (the ``minhash_band_blocks`` discipline). The
+    earlier exploded-JVM shape ran one xxhash64 eval per hash per shingle row
+    — 3.4B evals on a 700k-file corpus, 68% of the corpus-prep job's wall and
+    an AGGREGATE_OUT_OF_MEMORY under an 8 GiB heap. Shingle jaccard over the
+    kernel's hashed windows equals string-shingle jaccard up to 64-bit
+    collisions (the id-surrogate collision class the engine already accepts).
     """
-    from entity_resolution_spark.functions.fast_text import N_MINHASH, code_features
+    from entity_resolution_spark.functions.fast_text import code_features
+    from entity_resolution_spark.operators.blocking import BANDS, NUM_HASHES
 
-    blk = _blk_expr(block_col)
-    if num_hashes == N_MINHASH:
-        base = docs.select(
-            F.col(id_col).alias("_id"),
-            blk,
-            code_features(F.col(text_col), shingle_k).alias("_cf"),
-        ).select(
-            "_id",
-            "_blk",
-            F.col("_cf.shingles").alias("_sh"),
-            F.col("_cf.minhash").alias("_mh"),
-        )
-        # base feeds the band subtree AND both verify probes — materialize
-        # the kernel output once (same discipline as jaccard_pairs)
-        base = base.localCheckpoint(eager=True)
-        mh = base
-    else:
-        # two-step select: bind tokens to a column before the shingle
-        # window-slide (HOF lambdas re-evaluate embedded child expressions per
-        # element — see pipeline.extract_features)
-        base = docs.select(
-            F.col(id_col).alias("_id"), blk,
-            TX.tokens(F.col(text_col)).alias("_tk"),
-        ).select(
-            "_id",
-            "_blk",
-            F.array_distinct(TX.shingles(F.col("_tk"), shingle_k)).alias("_sh"),
-        )
-        base = base.localCheckpoint(eager=True)
-        mh = (
-            base.select("_id", "_blk", F.explode("_sh").alias("_v"))
-            .groupBy("_id", "_blk")
-            .agg(minhash_signature(F.col("_v"), num_hashes).alias("_mh"))
-        )
-    sig = mh.where(F.size("_mh") == num_hashes).select(
-        "_id", "_blk", *band_hashes("_mh", num_hashes, bands)
+    base = docs.select(
+        F.col(id_col).alias("_id"),
+        _blk_expr(block_col),
+        code_features(F.col(text_col), shingle_k).alias("_cf"),
+    ).select(
+        "_id",
+        "_blk",
+        F.col("_cf.shingles").alias("_sh"),
+        F.col("_cf.minhash").alias("_mh"),
+    )
+    # base feeds the band subtree AND both verify probes — materialize the
+    # kernel output once (same discipline as jaccard_pairs)
+    base = base.localCheckpoint(eager=True)
+    sig = base.where(F.size("_mh") == NUM_HASHES).select(
+        "_id", "_blk", *band_hashes("_mh", NUM_HASHES, BANDS)
     )
     # band-bucket key includes the block: with block_col set, candidates can
     # only form within a block (the IdentityBlocker twin of the exact path)
@@ -421,7 +395,7 @@ def minhash_lsh_dup_pairs(
                         F.lit(str(b)),
                         F.col(f"band_{b}").cast("string"),
                     )
-                    for b in range(bands)
+                    for b in range(BANDS)
                 ]
             )
         ).alias("_bk"),

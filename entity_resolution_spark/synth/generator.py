@@ -226,11 +226,23 @@ LABELED_PAIRS_SCHEMA = "blocking_key string, unique_id_a string, unique_id_b str
 
 
 def corpus_dataframes(spark, cfg: SynthConfig | None = None):
-    """Materialize the corpus as three Spark DataFrames."""
-    repo_files, ground_truth, labeled_pairs = generate_corpus(cfg)
-    from pyspark.sql import Row
+    """Materialize the corpus as three Spark DataFrames.
 
-    df_files = spark.createDataFrame([Row(**r) for r in repo_files], schema=REPO_FILES_SCHEMA)
-    df_gt = spark.createDataFrame([Row(**r) for r in ground_truth], schema=GROUND_TRUTH_SCHEMA)
-    df_lp = spark.createDataFrame([Row(**r) for r in labeled_pairs], schema=LABELED_PAIRS_SCHEMA)
-    return df_files, df_gt, df_lp
+    Each frame is built from a ``pa.Table`` under its DDL schema, so every
+    scan reads rows the JVM already holds instead of re-running a Python-RDD
+    scan of pickled rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    def frame(rows, ddl):
+        schema = DataType.fromDDL(ddl)
+        table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+        return spark.createDataFrame(table, schema=schema)
+
+    repo_files, ground_truth, labeled_pairs = generate_corpus(cfg)
+    return (
+        frame(repo_files, REPO_FILES_SCHEMA),
+        frame(ground_truth, GROUND_TRUTH_SCHEMA),
+        frame(labeled_pairs, LABELED_PAIRS_SCHEMA),
+    )

@@ -103,9 +103,7 @@ def test_embedding_near_dup(spark):
 
 def test_minhash_block_col_scopes_bands(spark):
     """block_col scopes band buckets: IDENTICAL texts in different blocks
-    must never pair (the IdentityBlocker twin of the exact path) — on both
-    the kernel signature path (num_hashes == N_MINHASH) and the exploded
-    fallback (any other width)."""
+    must never pair (the IdentityBlocker twin of the exact path)."""
     from entity_resolution_spark.operators.dedup import minhash_dup_clusters
 
     docs = spark.createDataFrame(
@@ -117,15 +115,12 @@ def test_minhash_block_col_scopes_bands(spark):
         ],
         "doc_id long, text string, lang string",
     )
-    for nh, nb in ((32, 16), (16, 8)):  # kernel width, then fallback width
-        out = {
-            r["doc_id"]: r["cluster"]
-            for r in minhash_dup_clusters(
-                docs, threshold=0.5, num_hashes=nh, bands=nb, block_col="lang"
-            ).collect()
-        }
-        assert out[1] == out[2], (nh, out)
-        assert out[3] != out[1] and out[4] != out[1], (nh, out)
+    out = {
+        r["doc_id"]: r["cluster"]
+        for r in minhash_dup_clusters(docs, threshold=0.5, block_col="lang").collect()
+    }
+    assert out[1] == out[2], out
+    assert out[3] != out[1] and out[4] != out[1], out
 
 
 def test_null_block_semantics_agree_across_twins(spark):

@@ -13,8 +13,6 @@ from __future__ import annotations
 
 import itertools
 
-import numpy as np
-import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -39,35 +37,37 @@ def _dense_union_find(n: int, edges: list[tuple[int, int]]) -> list[int]:
     return [find(i) for i in range(n)]
 
 
-term_sets = st.lists(
-    st.integers(min_value=0, max_value=40), min_size=0, max_size=12, unique=True
-)
+# unsorted, with repeated ids: the producers emit each row's ids unique and
+# ascending, but the kernel must also be right for any other order
+term_lists = st.lists(st.integers(min_value=0, max_value=40), min_size=0, max_size=12)
 
 
 @settings(max_examples=150, deadline=None)
 @given(
-    st.lists(term_sets, min_size=1, max_size=8),
-    st.lists(term_sets, min_size=1, max_size=8),
+    st.lists(term_lists, min_size=1, max_size=8),
+    st.lists(term_lists, min_size=1, max_size=8),
+    st.booleans(),
     st.randoms(use_true_random=False),
 )
-def test_cosine_jaccard_kernel_matches_dense(tas, tbs, rng):
+def test_cosine_jaccard_kernel_matches_dense(score_pairs, tas, tbs, canonical, rng):
     """The Arrow pair-scoring core (composite-key intersect) must agree with a
-    direct dense computation of dot product and distinct-set jaccard."""
-    from entity_resolution_spark.functions.vectors import _batch_cosine_jaccard
-
+    direct dense computation of dot product and distinct-set jaccard, where a
+    term id repeated within a row counts once with its weights summed."""
     n = min(len(tas), len(tbs))
     tas, tbs = tas[:n], tbs[:n]
+    if canonical:  # the TF-IDF producers' shape: the kernel's strictly-increasing path
+        tas = [sorted(set(t)) for t in tas]
+        tbs = [sorted(set(t)) for t in tbs]
     was = [[round(rng.uniform(0.1, 2.0), 3) for _ in t] for t in tas]
     wbs = [[round(rng.uniform(0.1, 2.0), 3) for _ in t] for t in tbs]
-    dots, jacs = _batch_cosine_jaccard(
-        pd.Series([np.array(t, np.int64) for t in tas]),
-        pd.Series([np.array(w, np.float64) for w in was]),
-        pd.Series([np.array(t, np.int64) for t in tbs]),
-        pd.Series([np.array(w, np.float64) for w in wbs]),
-    )
+    dots, jacs = score_pairs(tas, was, tbs, wbs)
     for i in range(n):
-        wa = dict(zip(tas[i], was[i]))
-        wb = dict(zip(tbs[i], wbs[i]))
+        wa: dict[int, float] = {}
+        wb: dict[int, float] = {}
+        for t, w in zip(tas[i], was[i]):
+            wa[t] = wa.get(t, 0.0) + w
+        for t, w in zip(tbs[i], wbs[i]):
+            wb[t] = wb.get(t, 0.0) + w
         inter = set(tas[i]) & set(tbs[i])
         union = set(tas[i]) | set(tbs[i])
         want_dot = sum(wa[t] * wb[t] for t in inter)

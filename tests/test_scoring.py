@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from entity_resolution_spark.functions.strings import jaro_winkler_py, levenshtein_sim
-from entity_resolution_spark.functions.vectors import cosine_sorted_udf, tfidf_vectors
+from entity_resolution_spark.functions.vectors import tfidf_vectors
 from entity_resolution_spark.operators.scoring import (
     PAIR_FEATURES,
     ScorerWeights,
@@ -29,42 +29,29 @@ def test_tfidf_unit_norm_and_idf(spark):
         assert list(r["terms"]) == sorted(r["terms"])
 
 
-def test_cosine_udf_identical_and_disjoint(spark):
-    df = spark.createDataFrame(
-        [
-            ([1, 2], [0.6, 0.8], [1, 2], [0.6, 0.8]),
-            ([1, 2], [0.6, 0.8], [3, 4], [1.0, 0.0]),
-        ],
-        "ta array<long>, wa array<double>, tb array<long>, wb array<double>",
+def test_cosine_udf_identical_and_disjoint(score_pairs):
+    got, _ = score_pairs(
+        [[1, 2], [1, 2]], [[0.6, 0.8], [0.6, 0.8]],
+        [[1, 2], [3, 4]], [[0.6, 0.8], [1.0, 0.0]],
     )
-    got = [r["c"] for r in df.select(cosine_sorted_udf("ta", "wa", "tb", "wb").alias("c")).collect()]
     assert abs(got[0] - 1.0) < 1e-9
     assert got[1] == 0.0
 
 
-def test_pair_kernel_duplicate_term_ids_exact():
+def test_pair_kernel_duplicate_term_ids_exact(score_pairs):
     """assume_unique hazard (VERDICT r3 #3): within-row duplicate term ids —
     e.g. two distinct terms collided to one 31-bit hash — must not corrupt
     the intersect. The kernel merges duplicates by summing weights (the
     assembler's canonical collided-run rule), so cosine/jaccard equal the
     dense computation over the merged vectors."""
-    import numpy as np
-    import pandas as pd
-
-    from entity_resolution_spark.functions.vectors import _batch_cosine_jaccard
-
     # row 0: side A carries term 7 TWICE (weights .6 and .8 — merge to 1.4);
     # the intersect must see ONE key per (row, term) and the merged weight
-    ta = pd.Series([np.array([7, 7, 9])])
-    wa = pd.Series([np.array([0.6, 0.8, 0.36])])
-    tb = pd.Series([np.array([7, 9])])
-    wb = pd.Series([np.array([0.8, 0.36])])
-    dots, jac = _batch_cosine_jaccard(ta, wa, tb, wb)
+    dots, jac = score_pairs([[7, 7, 9]], [[0.6, 0.8, 0.36]], [[7, 9]], [[0.8, 0.36]])
     assert dots[0] == (0.6 + 0.8) * 0.8 + 0.36 * 0.36  # exact float arithmetic
     assert jac[0] == 1.0  # {7,9} vs {7,9} after the merge, not 2/3
 
 
-def test_tfidf_collision_term_ids_unique_and_self_cosine(spark):
+def test_tfidf_collision_term_ids_unique_and_self_cosine(spark, score_pairs):
     """Two distinct int64 shingle values whose 31-bit xxhash64 ids collide
     (46796 and 55022 → 193894664, found by birthday search over the bit-exact
     numpy replica) in ONE doc: the assembler must emit unique term ids
@@ -91,17 +78,11 @@ def test_tfidf_collision_term_ids_unique_and_self_cosine(spark):
         assert len(terms) == len(set(terms)), "collided ids must be merged"
         assert terms == sorted(terms)
     assert len(rows[1]["terms"]) == 2  # {collided_id, hash(999)}
-    pairs = (
-        vecs.alias("x")
-        .join(vecs.alias("y"), F.col("x.unique_id") == F.col("y.unique_id"))
-        .select(
-            cosine_sorted_udf(
-                "x.terms", "x.weights", "y.terms", "y.weights"
-            ).alias("c")
-        )
-    )
-    for r in pairs.collect():
-        assert abs(r["c"] - 1.0) < 1e-6
+    terms = [r["terms"] for r in rows.values()]
+    weights = [r["weights"] for r in rows.values()]
+    cos, _ = score_pairs(terms, weights, terms, weights)
+    for c in cos:
+        assert abs(c - 1.0) < 1e-6
 
 
 def test_jaro_winkler_known_values():
@@ -186,14 +167,11 @@ def test_feature_boost_reference_golden(spark):
     assert got[("a1", "a3")] == 0.2   # untouched
 
 
-def test_typed_feature_tokens_features_text_vectorisation(spark):
+def test_typed_feature_tokens_features_text_vectorisation(spark, score_pairs):
     # FullArticleFeaturesTextExtractor contract (reference combiners/tfidf.py:
     # 98-116): one "FAMILY-value" token per extracted value; the token array is
     # the features-text document and TF-IDFs like any other term column.
-    from pyspark.sql import functions as F
-
     from entity_resolution_spark.functions.vectors import (
-        cosine_sorted_udf,
         tfidf_vectors,
         typed_feature_tokens,
     )
@@ -218,24 +196,28 @@ def test_typed_feature_tokens_features_text_vectorisation(spark):
     assert got["r2"] == ["KW-tok", "LANG-python", "LIC-gpl"]
     assert got["r3"] == ["LANG-go", "LIC-mit"]  # null array drops silently
 
-    vecs = tfidf_vectors(toks, "unique_id", "ftoks")
-    a = vecs.select(F.col("unique_id").alias("ia"), F.col("terms").alias("ta"), F.col("weights").alias("wa"))
-    b = vecs.select(F.col("unique_id").alias("ib"), F.col("terms").alias("tb"), F.col("weights").alias("wb"))
-    pairs = a.join(b, F.col("ia") < F.col("ib")).select(
-        "ia", "ib", cosine_sorted_udf("ta", "wa", "tb", "wb").alias("cos")
+    vecs = {r["unique_id"]: r for r in tfidf_vectors(toks, "unique_id", "ftoks").collect()}
+    pairs = [(ia, ib) for ia in vecs for ib in vecs if ia < ib]
+    a = [vecs[ia] for ia, _ in pairs]
+    b = [vecs[ib] for _, ib in pairs]
+    cos, _ = score_pairs(
+        [r["terms"] for r in a], [r["weights"] for r in a],
+        [r["terms"] for r in b], [r["weights"] for r in b],
     )
-    got = {(r["ia"], r["ib"]): r["cos"] for r in pairs.collect()}
+    got = dict(zip(pairs, cos))
     assert got[("r1", "r2")] > 0.3      # shares LANG-python and KW-tok
     assert got[("r1", "r3")] == 0.0     # nothing shared
     assert got[("r2", "r3")] == 0.0     # disjoint values in every family
 
 
-def test_tfidf_physical_strategy_parity(spark):
+def test_tfidf_physical_strategy_parity(spark, monkeypatch):
     """The physical strategies — broadcast kernel, mmap-file kernel, fused
     term-stream kernel, tf-aggregation fallback — must emit bit-identical
     vectors: same int32 term ids, same float32 weights, same tie/dedup
     handling."""
     import random
+
+    from entity_resolution_spark.functions import vectors as V
 
     rng = random.Random(7)
     rows = []
@@ -245,44 +227,30 @@ def test_tfidf_physical_strategy_parity(spark):
         rows.append((i, toks))
     docs = spark.createDataFrame(rows, "unique_id long, toks array<long>")
 
-    def snap(df):
+    def snap(broadcast_rows, mmap_rows, terms_distinct=True):
+        # the tier gates are module constants; set them for this build only
+        monkeypatch.setattr(V, "BROADCAST_VOCAB_ROWS", broadcast_rows)
+        monkeypatch.setattr(V, "MMAP_VOCAB_ROWS", mmap_rows)
+        df = tfidf_vectors(
+            docs, "unique_id", "toks", min_df=2, top_k=16,
+            terms_distinct=terms_distinct,
+        )
         return {
             r["unique_id"]: (list(r["terms"]), list(r["weights"]))
             for r in df.collect()
         }
 
     # broadcast gate wide open -> broadcast kernel
-    bcast = snap(
-        tfidf_vectors(
-            docs, "unique_id", "toks", min_df=2, top_k=16,
-            terms_distinct=True, broadcast_vocab_rows=10**9,
-        )
-    )
+    bcast = snap(10**9, V.MMAP_VOCAB_ROWS)
     # broadcast gate shut, mmap gate open -> file-backed (addFile/memmap) kernel
-    mmapped = snap(
-        tfidf_vectors(
-            docs, "unique_id", "toks", min_df=2, top_k=16,
-            terms_distinct=True, broadcast_vocab_rows=0,
-            mmap_vocab_rows=10**9,
-        )
-    )
+    mmapped = snap(0, 10**9)
     assert bcast == mmapped
     # both kernel gates shut -> fused term-stream kernel
-    fused = snap(
-        tfidf_vectors(
-            docs, "unique_id", "toks", min_df=2, top_k=16,
-            terms_distinct=True, broadcast_vocab_rows=0, mmap_vocab_rows=0,
-        )
-    )
+    fused = snap(0, 0)
     assert bcast == fused
     # terms_distinct=False (tf aggregation first) must agree too: inputs are
     # duplicate-free, so tf==1 and the output is identical
-    tf_path = snap(
-        tfidf_vectors(
-            docs, "unique_id", "toks", min_df=2, top_k=16,
-            terms_distinct=False, broadcast_vocab_rows=0, mmap_vocab_rows=0,
-        )
-    )
+    tf_path = snap(0, 0, terms_distinct=False)
     assert bcast == tf_path
 
 

@@ -13,12 +13,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from entity_resolution_spark.functions.strings import jaro_winkler_udf, levenshtein_sim  # noqa: E402
-from entity_resolution_spark.functions.vectors import cosine_jaccard_udf  # noqa: E402
+from entity_resolution_spark.functions.strings import levenshtein_sim  # noqa: E402
 from entity_resolution_spark.operators.blocking import block_assignments  # noqa: E402
 from entity_resolution_spark.operators.pairs import candidate_pairs  # noqa: E402
+from entity_resolution_spark.operators.scoring import build_pair_features  # noqa: E402
 from entity_resolution_spark.plans.pipeline import (  # noqa: E402
     PipelineConfig,
+    bump_block_sizes,
     extract_features,
     pipeline_vectors,
 )
@@ -38,7 +39,11 @@ def main() -> int:
         print(f"T {name}: {time.monotonic() - t0:.1f}s", flush=True)
         return r
 
-    feats = extract_features(rf, cfg).persist()
+    # int64 surrogate ids, as resolve() uses from the vectors stage on (the
+    # pair kernel's output schema declares long ids)
+    feats = extract_features(rf, cfg).withColumn(
+        "unique_id", F.xxhash64("unique_id")
+    ).persist()
     t("warm_features", lambda: feats.count())
     vec = pipeline_vectors(feats).persist()
     t("warm_vectors", lambda: vec.count())
@@ -63,12 +68,11 @@ def main() -> int:
     t("scalar_lev", lambda: p.select(
         levenshtein_sim(F.col("stem_a"), F.col("stem_b")).alias("x")
     ).agg(F.sum("x")).collect())
-    t("jw_udf", lambda: p.select(
-        jaro_winkler_udf("stem_a", "stem_b").alias("x")
-    ).agg(F.sum("x")).collect())
-    t("cosine_jaccard_udf", lambda: p.withColumn(
-        "_cj", cosine_jaccard_udf("terms_a", "weights_a", "terms_b", "weights_b")
-    ).select(F.col("_cj.cosine").alias("c")).agg(F.sum("c")).collect())
+    # the pass resolve() runs: joins + JVM features + the score_pair_batches
+    # kernel (cosine, jaccard, jaro-winkler)
+    t("score_pair_batches", lambda: build_pair_features(
+        pairs, feats, vec, block_sizes=bump_block_sizes(asg, cfg)
+    ).agg(F.sum("cosine")).collect())
 
     bs = (
         asg.groupBy("block_key").agg(F.count("*").alias("_n"))
