@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from entity_resolution_spark.operators.components import connected_components
+from entity_resolution_spark.operators.components import label_components
 
 
 def _canon_pairs(df: DataFrame, id_a: str, id_b: str, keep: list[str]) -> DataFrame:
@@ -80,17 +80,10 @@ def annotate_and_cluster(
     records become singleton clusters (their own id), exactly like the batch
     pipeline's cluster stage.
     """
-    overridden = apply_label_overrides(edges, labeled_pairs)
-    labels = connected_components(
-        overridden.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    return (
-        vertices.select(F.col(id_col))
-        .join(labels, vertices[id_col] == labels["id"], "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("cluster_rep"),
-        )
+    return label_components(
+        vertices.select(id_col),
+        apply_label_overrides(edges, labeled_pairs),
+        id_col, "id_a", "id_b", out_col="cluster_rep",
     )
 
 

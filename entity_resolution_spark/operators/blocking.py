@@ -195,7 +195,7 @@ def cutoff_harvest_blocks(
     the loop is the reference's own pass structure, not per-record iteration.
     """
     from entity_resolution_spark.operators.adjacency import feature_intersection_edges
-    from entity_resolution_spark.operators.components import connected_components
+    from entity_resolution_spark.operators.components import label_components
 
     assert len(feature_cols) == len(th_schedule), "feature and threshold counts must match"
 
@@ -234,13 +234,8 @@ def cutoff_harvest_blocks(
                 .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
                 .distinct()
             )
-            labels = connected_components(edges)
-            comp = (
-                work.join(labels, work["_tid"] == labels["id"], "left")
-                .select(
-                    work["_id"], work["_type"], work["_tid"],
-                    F.coalesce(F.col("component"), work["_tid"]).alias("_comp"),
-                )
+            comp = label_components(
+                work.select("_id", "_type", "_tid"), edges, "_tid", out_col="_comp"
             ).persist()
             sizes = comp.groupBy("_comp").agg(F.count("*").alias("_cs"))
             harvest = (

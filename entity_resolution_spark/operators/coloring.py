@@ -82,15 +82,17 @@ def colour_negative_edges_split(
     id_a: str = "id_a",
     id_b: str = "id_b",
     weight_col: str = "score",
-    persisted: list | None = None,
 ) -> DataFrame:
-    """Positive match edges ⊕ negative edges → (id, cluster_id).
+    """Positive match edges ⊕ negative edges → (unique_id, cluster_id, component).
 
     Components of the positive graph WITHOUT internal negative edges keep their
     CC label; components with negative evidence are recoloured (reference
     ``Splitter.split``, common.py:109-127, dispatches ``break_subgraph`` only
     for clusters containing negative edges). Cluster ids of recoloured
     components are ``<component>#c<colour>`` — globally unique, deterministic.
+    ``component`` is the record's positive-graph component (the min id), so a
+    caller can check the split against the CC partition without running CC
+    again. Rows cover exactly the nodes of the positive graph.
     """
     from entity_resolution_spark.operators.components import connected_components
 
@@ -103,19 +105,16 @@ def colour_negative_edges_split(
         F.col(id_b).cast("string").alias("id_b"),
         F.col(weight_col).cast("double").alias("w"),
     ).localCheckpoint(eager=True)
-    # labels is consumed by four joins below; with a caller release list it is
-    # persisted and handed over (engine convention — see pipeline.release());
-    # without one it is eagerly localCheckpointed instead, whose blocks the
-    # ContextCleaner reclaims when the frame is collected — a bare persist
-    # here would outlive the call (the jaccard_pairs leak class from ADVICE).
-    labels = connected_components(pe, "id_a", "id_b").withColumnRenamed(
-        "component", "_comp"
+    # connected_components, not label_components: the splitter labels only the
+    # nodes of the positive graph, so there is no vertex set to join back.
+    # labels is consumed by four joins below: an eager localCheckpoint, whose
+    # blocks the ContextCleaner reclaims when the frame is collected — a bare
+    # persist here would outlive the call (the jaccard_pairs leak class).
+    labels = (
+        connected_components(pe, "id_a", "id_b")
+        .withColumnRenamed("component", "_comp")
+        .localCheckpoint(eager=True)
     )
-    if persisted is not None:
-        labels = labels.persist()
-        persisted.append(labels)
-    else:
-        labels = labels.localCheckpoint(eager=True)
 
     ne = (
         neg_edges.select(
@@ -140,7 +139,9 @@ def colour_negative_edges_split(
     # negative evidence); broadcast the semi-join key set to every probe
     bad_comps = F.broadcast(ne.select("_comp").distinct())
     clean = labels.join(bad_comps, "_comp", "left_anti").select(
-        F.col("id").alias("unique_id"), F.col("_comp").alias("cluster_id")
+        F.col("id").alias("unique_id"),
+        F.col("_comp").alias("cluster_id"),
+        F.col("_comp").alias("component"),
     )
 
     # union the three row kinds per dirty component into one grouped frame
@@ -166,6 +167,7 @@ def colour_negative_edges_split(
         [
             T.StructField("unique_id", T.StringType()),
             T.StructField("cluster_id", T.StringType()),
+            T.StructField("component", T.StringType()),
         ]
     )
 
@@ -187,6 +189,7 @@ def colour_negative_edges_split(
             {
                 "unique_id": ids,
                 "cluster_id": [f"{key[0]}#c{c}" for c in colours],
+                "component": key[0],
             }
         )
 

@@ -12,12 +12,24 @@ under any partitioning/order — the distributed replacement for the reference's
 
 The node type is any orderable Spark type (long or string); the loop is
 type-agnostic. Each iteration ``localCheckpoint``s to truncate lineage.
+
+:func:`label_components` is the engine's one labeling step (the reference's
+``compute_cluster_ids_from_adjacency_matrix``): it runs
+:func:`connected_components` and left-joins every vertex back, so each record
+set gets its cluster labels the same way — vertex columns pass through, the
+label column is added, and a vertex in no edge is labeled with its own id.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Strategy thresholds of connected_components, read at call time. Every path
+# yields the same min-id labels; these only pick the cheapest one.
+MAX_ITERATIONS = 50  # alternating-star rounds before non-convergence raises
+SMALL_GRAPH_EDGES = 5_000_000  # most (contracted) edges the one-task union-find takes
+CONTRACT_MIN_EDGES = 2_000_000  # raw edges above which partitions contract first
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -180,23 +192,18 @@ def _partition_forest(e: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 50,
-    small_graph_edges: int = 5_000_000,
-    contract_min_edges: int = 2_000_000,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Edge DataFrame → component labels ``(id, component)``.
 
     ``component`` is the min node id of the component. Nodes appear iff they appear
     in ``edges``; union isolated vertices downstream (see :func:`label_components`).
 
-    Inputs above ``contract_min_edges`` raw edges first pass
+    Inputs above ``CONTRACT_MIN_EDGES`` raw edges first pass
     :func:`_partition_forest` — a narrow (no exchange) per-partition
     union-find that contracts each partition's edge multiset to its
     spanning forest. Graphs whose (contracted) edge set has ≤
-    ``small_graph_edges`` rows take the single-task union-find fast path
+    ``SMALL_GRAPH_EDGES`` rows take the single-task union-find fast path
     (:func:`_single_task_components`); larger graphs run the
     alternating-star loop, whose every round is a shuffle-bounded job — the
     100 TB shape. All paths produce identical min-id labels, so the
@@ -218,7 +225,7 @@ def connected_components(
         out = e.select(F.col("src").alias("id"), F.col("dst").alias("component"))
         e.unpersist()
         return out
-    if n_edges > contract_min_edges:
+    if n_edges > CONTRACT_MIN_EDGES:
         # Per-partition union-find contraction (round-5 scaling work: bytes,
         # not arguments): replace the edge multiset with its per-partition
         # spanning forest BEFORE anything crosses an exchange or the serial
@@ -232,7 +239,7 @@ def connected_components(
         n_edges = f.count()
         e.unpersist()
         e = f
-    if n_edges <= small_graph_edges:
+    if n_edges <= SMALL_GRAPH_EDGES:
         # materialize before releasing the input cache (the labels frame is
         # consumed by several downstream joins — cut the tree here too)
         out = _single_task_components(e).localCheckpoint(eager=True)
@@ -240,13 +247,13 @@ def connected_components(
         return out
     seed = e.distinct().repartition("src").localCheckpoint(eager=True)
     e.unpersist()
-    return _cc_loop(seed, max_iterations)
+    return _cc_loop(seed)
 
 
-def _cc_loop(e: DataFrame, max_iterations: int) -> DataFrame:
+def _cc_loop(e: DataFrame) -> DataFrame:
     """``e`` must already be materialized (checkpointed) by the caller."""
     prev_sig = None
-    for _ in range(max_iterations):
+    for _ in range(MAX_ITERATIONS):
         e = _large_star(e)
         e = _small_star(e).localCheckpoint(eager=True)
         sig_row = e.agg(
@@ -258,7 +265,7 @@ def _cc_loop(e: DataFrame, max_iterations: int) -> DataFrame:
             break
         prev_sig = sig
     else:
-        raise RuntimeError(f"connected_components did not converge in {max_iterations} rounds")
+        raise RuntimeError(f"connected_components did not converge in {MAX_ITERATIONS} rounds")
 
     # post-convergence the graph is a forest of stars: (node → root)
     labels = e.select(F.col("src").alias("id"), F.col("dst").alias("component"))
@@ -276,7 +283,8 @@ def label_components(
     dst: str = "dst",
     out_col: str = "component",
 ) -> DataFrame:
-    """All vertices labeled; isolated vertices become singleton components (their own id)."""
+    """Every vertex row with its component id added as ``out_col``; vertex
+    columns pass through, isolated vertices become singletons (their own id)."""
     labels = connected_components(edges, src, dst)
     return (
         vertices.join(labels, vertices[id_col] == labels["id"], "left")

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from entity_resolution_spark.functions import text as TX
 from entity_resolution_spark.functions.hashing import band_hashes
 from entity_resolution_spark.functions.vectors import array_jaccard, cosine_array_cols
-from entity_resolution_spark.operators.components import connected_components
+from entity_resolution_spark.operators.components import label_components
 
 
 def _blk_expr(block_col: str | None):
@@ -238,16 +238,8 @@ def jaccard_dup_clusters(
     ``block_col``) to make this the exact verification twin of the MinHash
     scale path."""
     edges = jaccard_pairs(docs, id_col, text_col, block_col, threshold, ngram)
-    vertices = docs.select(F.col(id_col).alias("id"))
-    labels = connected_components(
-        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    return (
-        vertices.join(labels, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce(F.col("component"), F.col("id")).alias("cluster"),
-        )
+    return label_components(
+        docs.select(id_col), edges, id_col, "id_a", "id_b", out_col="cluster"
     )
 
 
@@ -284,16 +276,8 @@ def minhash_dup_clusters(
         docs, id_col=id_col, text_col=text_col, shingle_k=shingle_k,
         verify_threshold=threshold, band_cap=band_cap, block_col=block_col,
     )
-    vertices = docs.select(F.col(id_col).alias("id"))
-    labels = connected_components(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    return (
-        vertices.join(labels, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce(F.col("component"), F.col("id")).alias("cluster"),
-        )
+    return label_components(
+        docs.select(id_col), pairs, id_col, "id_a", "id_b", out_col="cluster"
     )
 
 

@@ -197,17 +197,32 @@ def fastrp_resolve(
     their own cluster via the dense matrix; min-id labeling preserves that).
     """
     from entity_resolution_spark.operators.adjacency import feature_intersection_edges
-    from entity_resolution_spark.operators.components import connected_components
 
     edges = feature_intersection_edges(
         records, feature_cols, id_col=id_col, inverse_degree=True
     )
     emb = fastrp_embeddings(edges, dim=dim, proj_weights=proj_weights).persist()
+    out = cosine_threshold_clusters(records, emb, id_col, th)
+    emb.unpersist()
+    return out
 
-    # zero-norm embeddings (a node whose neighborhood projection cancels or
-    # zeroes out) carry no direction: exclude them from the cosine join — they
-    # resolve as singletons via the left-join coalesce below — instead of
-    # dividing by zero (an ANSI-mode job failure, and NaN otherwise)
+
+def cosine_threshold_clusters(
+    records: DataFrame, emb: DataFrame, id_col: str, th: float
+) -> DataFrame:
+    """Shared tail of the FastRP and GCN combiners: all-pairs cosine > ``th``
+    over the node embeddings ``emb`` (id, embedding) → connected components →
+    (id_col, cluster_id) for every record, min-id labels. Records without an
+    embedding, or with a zero-norm one, are singletons labeled by their own id.
+
+    ``emb`` is scanned by both sides of the pair join: the caller caches it,
+    and may release it once this returns (the components are computed here)."""
+    from entity_resolution_spark.operators.components import label_components
+
+    # zero-norm embeddings (a node whose neighborhood projection cancels, or
+    # all-zero GCN input features through LeakyReLU) carry no direction:
+    # exclude them from the cosine join — they resolve as singletons — instead
+    # of dividing by zero (an ANSI-mode job failure, and NaN otherwise)
     norm_col = F.sqrt(
         F.aggregate("embedding", F.lit(0.0), lambda s, v: s + v * v)
     )
@@ -229,15 +244,7 @@ def fastrp_resolve(
         .select("id_a", "id_b", (dot / (F.col("_na") * F.col("_nb"))).alias("sim"))
         .where(F.col("sim") > th)
     )
-    labels = connected_components(sim_edges, "id_a", "id_b")
-    out = (
-        records.select(F.col(id_col).cast("string").alias("id"))
-        .distinct()
-        .join(labels, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce(F.col("component"), F.col("id")).alias("cluster_id"),
-        )
+    return label_components(
+        records.select(F.col(id_col).cast("string").alias(id_col)).distinct(),
+        sim_edges, id_col, "id_a", "id_b", out_col="cluster_id",
     )
-    emb.unpersist()
-    return out

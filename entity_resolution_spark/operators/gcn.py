@@ -179,45 +179,15 @@ def gcn_resolve(
 def _cosine_threshold_cc(
     records: DataFrame, emb: DataFrame, id_col: str, th: float
 ) -> DataFrame:
-    """Shared tail of the GCN combiners (ml.py:160-209): L2-normalized
-    all-pairs cosine > th (+0.02 above 400 records) → CC → min-id labels,
-    singletons for nodes without an embedding or with a zero-norm one."""
-    from entity_resolution_spark.operators.components import connected_components
+    """Tail of the GCN combiners (ml.py:160-209): the threshold gets +0.02
+    above 400 embedded records, then the FastRP cosine tail labels the
+    clusters (:func:`fastrp.cosine_threshold_clusters`)."""
+    from entity_resolution_spark.operators.fastrp import cosine_threshold_clusters
 
     emb = emb.persist()
     n = emb.count()
     eff_th = th + (LARGE_CLUSTER_TH_BUMP_UP if n > LARGE_CLUSTER_LIMIT else 0.0)
-
-    # zero-norm embeddings (all-zero input features through LeakyReLU can
-    # yield an all-zero h) carry no direction: exclude them from the cosine
-    # join — they resolve as singletons via the left-join coalesce below —
-    # instead of dividing by zero (an ANSI-mode job failure, NaN otherwise)
-    norm_col = F.sqrt(
-        F.aggregate("embedding", F.lit(0.0), lambda s, v: s + v * v)
-    )
-    ne = emb.select("id", "embedding", norm_col.alias("_n")).where(F.col("_n") > 0)
-    a = ne.select(F.col("id").alias("id_a"), F.col("embedding").alias("_ea"),
-                  F.col("_n").alias("_na"))
-    b = ne.select(F.col("id").alias("id_b"), F.col("embedding").alias("_eb"),
-                  F.col("_n").alias("_nb"))
-    dot = F.aggregate(
-        F.zip_with("_ea", "_eb", lambda u, v: u * v), F.lit(0.0), lambda s, v: s + v
-    )
-    sim_edges = (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", (dot / (F.col("_na") * F.col("_nb"))).alias("sim"))
-        .where(F.col("sim") > eff_th)
-    )
-    labels = connected_components(sim_edges, "id_a", "id_b")
-    out = (
-        records.select(F.col(id_col).cast("string").alias("id"))
-        .distinct()
-        .join(labels, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce(F.col("component"), F.col("id")).alias("cluster_id"),
-        )
-    )
+    out = cosine_threshold_clusters(records, emb, id_col, eff_th)
     emb.unpersist()
     return out
 

@@ -135,9 +135,7 @@ def spectral_cluster_blocks_gated(
     from entity_resolution_spark.operators.adjacency import (
         feature_intersection_edges,
     )
-    from entity_resolution_spark.operators.components import (
-        connected_components,
-    )
+    from entity_resolution_spark.operators.components import label_components
 
     base = records.select(
         F.col(id_col).cast("string").alias("_id"),
@@ -160,16 +158,7 @@ def spectral_cluster_blocks_gated(
         id_col=id_col,
         block_col=block_col,
     ).where(F.col("weight") >= ftr_th)
-    labels = connected_components(
-        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    labeled = (
-        base.join(labels, base["_id"] == labels["id"], "left")
-        .select(
-            "_id", "_blk", "_feats",
-            F.coalesce("component", F.col("_id")).alias("_comp"),
-        )
-    )
+    labeled = label_components(base, edges, "_id", "id_a", "id_b", out_col="_comp")
     sizes = labeled.groupBy("_blk", "_comp").agg(F.count("*").alias("_n"))
     labeled = labeled.join(sizes, ["_blk", "_comp"]).localCheckpoint(eager=True)
 

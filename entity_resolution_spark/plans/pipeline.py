@@ -162,6 +162,23 @@ def bump_block_sizes(assignments: DataFrame, cfg: "PipelineConfig") -> DataFrame
     )
 
 
+def surrogate_ids(features: DataFrame) -> DataFrame:
+    """Features keyed by the int64 surrogate ``xxhash64(unique_id)``; the
+    sha-hex id moves to ``unique_id_str``. The pair kernel declares
+    ``id_a long, id_b long``, so every ``build_pair_features`` caller needs it.
+
+    Id narrowing: the 64-BYTE sha-hex id rides in every shuffle key and sort
+    of the middle stages (blocking, pair join, edges, CC); the 8-byte
+    surrogate gives integer compares in the sort-merge joins (measured 27%
+    faster pair join), and the cluster stage maps back to the string id.
+    Collision risk n²/2^65 — at 10^12 records switch to a 128-bit pair
+    (connected components is type-agnostic, so that is a one-line change here).
+    """
+    return features.withColumn("unique_id_str", F.col("unique_id")).withColumn(
+        "unique_id", F.xxhash64("unique_id")
+    )
+
+
 def resolve(
     spark,
     repo_files: DataFrame,
@@ -195,16 +212,7 @@ def resolve(
         return out
 
     features = stage("features", lambda: extract_features(repo_files, cfg))
-    # Id narrowing: the sha-hex unique_id is a 64-BYTE string, and the middle
-    # stages (blocking, pair join, edges, CC) carry it in every shuffle key and
-    # sort. Swap to an int64 surrogate for those stages (8 bytes, integer
-    # compares in the sort-merge joins — measured 27% faster pair join) and map
-    # back to the string id at the cluster stage. Collision risk n²/2^65 —
-    # at 10^12 records switch to a 128-bit pair (connected components is
-    # type-agnostic, so that is a one-line change here).
-    fi = features.withColumn("unique_id_str", F.col("unique_id")).withColumn(
-        "unique_id", F.xxhash64("unique_id")
-    )
+    fi = surrogate_ids(features)
     vectors = stage("vectors", lambda: pipeline_vectors(fi, persisted))
     assignments = stage(
         "assignments", lambda: block_assignments(fi, cfg.blocking, persisted=persisted)
@@ -241,6 +249,9 @@ def resolve(
     edges = stage("match_edges", compute_edges)
 
     def compute_clusters():
+        # connected_components, not label_components: the label joins below
+        # are broadcast- or shuffle-hash-hinted by the label count, and the
+        # representative is the min STRING id, not the min surrogate
         labels = connected_components(
             edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         ).persist()

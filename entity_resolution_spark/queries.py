@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from entity_resolution_spark.functions import text as TX
 from entity_resolution_spark.functions.text import _LANG_MARKERS
 from entity_resolution_spark.operators.adjacency import negative_edges_numeric_distance
-from entity_resolution_spark.operators.components import connected_components
+from entity_resolution_spark.operators.components import label_components
 from entity_resolution_spark.operators.dedup import (
     exact_dup_groups,
     jaccard_pairs,
@@ -393,22 +393,15 @@ def _jaccard_edges_docs(
 def _cc_jaccard_labels_docs(
     spark: SparkSession, sf_dir: str, threshold: float = 0.6
 ) -> DataFrame:
-    def build():
-        edges = _jaccard_edges_docs(spark, sf_dir, threshold)
-        labels = connected_components(
-            edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        )
-        return (
-            _t(spark, sf_dir, "documents")
-            .select(F.col("doc_id").alias("id"))
-            .join(labels, "id", "left")
-            .select(
-                F.col("id").alias("doc_id"),
-                F.coalesce("component", F.col("id")).alias("component"),
-            )
-        )
-
-    return _session_memo(spark, ("cc", sf_dir, threshold), build)
+    return _session_memo(
+        spark,
+        ("cc", sf_dir, threshold),
+        lambda: label_components(
+            _t(spark, sf_dir, "documents").select("doc_id"),
+            _jaccard_edges_docs(spark, sf_dir, threshold),
+            "doc_id", "id_a", "id_b",
+        ),
+    )
 
 
 def q_jaccard_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1052,14 +1045,10 @@ def q_sanction_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("hub").alias("src"), F.col("c_custkey").alias("dst"))
         .distinct()
     )
-    comp = connected_components(edges)
-    return (
-        base.join(comp, base["c_custkey"] == comp["id"], "left")
-        .select(
-            "c_custkey",
-            F.coalesce("component", "c_custkey").cast("long").alias("entity_id"),
-            F.array_join("term_other_information", "|").alias("terms_cat"),
-        )
+    return label_components(base, edges, "c_custkey", out_col="entity_id").select(
+        "c_custkey",
+        F.col("entity_id").cast("long").alias("entity_id"),
+        F.array_join("term_other_information", "|").alias("terms_cat"),
     )
 
 
@@ -1582,7 +1571,9 @@ def q_colour_split_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "v", distance=200.0, block_col="lang",
     )
-    return colour_negative_edges_split(pos, neg).orderBy("unique_id")
+    return colour_negative_edges_split(pos, neg).select(
+        "unique_id", "cluster_id"
+    ).orderBy("unique_id")
 
 
 def q_top_terms_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1622,19 +1613,14 @@ def q_acceptance_distribution_docs(spark: SparkSession, sf_dir: str) -> DataFram
     from entity_resolution_spark.qa.distribution import check_acceptance_distribution
 
     d = _t(spark, sf_dir, "documents")
-    pairs = _minhash_pairs_docs(spark, sf_dir)
-    comp = connected_components(pairs, "id_a", "id_b")
     gt = d.groupBy("text").agg(F.min("doc_id").alias("_gt"))
-    clusters = (
-        d.join(gt, "text")
-        .join(comp.withColumnRenamed("id", "doc_id"), "doc_id", "left")
-        .select(
-            F.col("doc_id").cast("string").alias("unique_id"),
-            F.col("lang").alias("blocking_key"),
-            F.coalesce(F.col("component").cast("string"),
-                       F.col("doc_id").cast("string")).alias("cluster_id"),
-            F.col("_gt").cast("string").alias("ground_truth"),
-        )
+    clusters = label_components(
+        d.join(gt, "text"), _minhash_pairs_docs(spark, sf_dir), "doc_id", "id_a", "id_b"
+    ).select(
+        F.col("doc_id").cast("string").alias("unique_id"),
+        F.col("lang").alias("blocking_key"),
+        F.col("component").cast("string").alias("cluster_id"),
+        F.col("_gt").cast("string").alias("ground_truth"),
     )
     return check_acceptance_distribution(clusters, 0.3, 5).orderBy("run")
 
@@ -2695,16 +2681,10 @@ def q_colour_split_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         colour_negative_edges_split,
     )
 
-    # the splitter hands its internal CC labels out via the persisted list
-    # (engine convention) — recomputing connected_components over the same
-    # positive graph here would run the most expensive stage twice
-    held: list = []
-    labels = colour_negative_edges_split(
-        pos, neg, persisted=held
-    ).localCheckpoint(eager=True)
-    comp = held[0].select(
-        F.col("id").alias("unique_id"), F.col("_comp").alias("component")
-    )
+    # the splitter's component column is its own CC label — recomputing
+    # connected components over the same positive graph here would run the
+    # most expensive stage twice
+    labels = colour_negative_edges_split(pos, neg).localCheckpoint(eager=True)
     n_nodes = labels.count()
     la = labels.select(
         F.col("unique_id").alias("id_a"), F.col("cluster_id").alias("_ca")
@@ -2723,14 +2703,11 @@ def q_colour_split_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
     )
     n_cross = (
-        labels.join(comp, "unique_id")
-        .groupBy("cluster_id")
+        labels.groupBy("cluster_id")
         .agg(F.countDistinct("component").alias("_nc"))
         .where(F.col("_nc") > 1)
         .count()
     )
-    for f in held:  # release the handed-over CC labels cache
-        f.unpersist()
     return spark.createDataFrame(
         [(n_nodes, n_mono, n_cross)],
         "n_nodes bigint, n_monochromatic_neg bigint, n_clusters_crossing_components bigint",

@@ -90,6 +90,13 @@ def get_spark(
         # expected). Identical clusters. On a real cluster this also shrinks
         # network shuffle, the same trade in the same direction.
         .config("spark.io.compression.codec", "zstd")
+        # Python workers import this package inside UDFs; put its parent
+        # directory on their path so a driver started from any working
+        # directory (a tool run from outside the checkout) still finds it
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
     )
     # local-mode shuffle goes through spark.local.dir; the sandbox disk writes at
     # ~260 MB/s while /dev/shm does ~1.8 GB/s — a wide-row shuffle (pair-feature

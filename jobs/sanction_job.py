@@ -43,7 +43,7 @@ def build_clusters(records, entity_type: str, use_features: list[str], th: int):
     from pyspark.sql import functions as F
 
     from entity_resolution_spark.operators.adjacency import feature_intersection_edges
-    from entity_resolution_spark.operators.components import connected_components
+    from entity_resolution_spark.operators.components import label_components
     from entity_resolution_spark.operators.sanctions import (
         org_sanction_features,
         sanction_features,
@@ -61,15 +61,12 @@ def build_clusters(records, entity_type: str, use_features: list[str], th: int):
         ],
     ).localCheckpoint(eager=True)  # consumed by adjacency AND the label join
 
-    edges = (
-        feature_intersection_edges(base, use_features, id_col="sanction_id")
-        .where(F.col("weight") >= th)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    edges = feature_intersection_edges(base, use_features, id_col="sanction_id").where(
+        F.col("weight") >= th
     )
-    labels = connected_components(edges)
-    out = base.join(labels, base["sanction_id"] == labels["id"], "left").select(
-        "sanction_id",
-        F.coalesce("component", "sanction_id").alias("entity_id"),
+    out = label_components(
+        base.select("sanction_id"), edges, "sanction_id", "id_a", "id_b",
+        out_col="entity_id",
     )
     sizes = out.groupBy("entity_id").agg(F.count("*").alias("n_members"))
     return out.join(sizes, "entity_id").select("sanction_id", "entity_id", "n_members")

@@ -5,8 +5,10 @@ Fixture shapes from FIXTURES.md §5: chain a-b, b-c plus isolated d → {a,b,c},
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
 
+from entity_resolution_spark.operators import components
 from entity_resolution_spark.operators.components import connected_components, label_components
 
 
@@ -15,6 +17,21 @@ def test_chain_and_isolated(spark):
     vertices = spark.createDataFrame([(1,), (2,), (3,), (4,)], "id long")
     out = label_components(vertices, edges).orderBy("id").collect()
     assert [(r["id"], r["component"]) for r in out] == [(1, 1), (2, 1), (3, 1), (4, 4)]
+
+    # extra vertex columns pass through, custom id/src/dst/out names, and the
+    # isolated vertex "z" is labeled with its own id
+    vertices = spark.createDataFrame(
+        pd.DataFrame({"name": ["p", "q", "r"], "rid": ["a", "b", "z"]}),
+        "name string, rid string",
+    )
+    edges = spark.createDataFrame(
+        pd.DataFrame({"u": ["b"], "v": ["a"]}), "u string, v string"
+    )
+    out = label_components(vertices, edges, "rid", "u", "v", out_col="cluster")
+    assert out.columns == ["name", "rid", "cluster"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("p", "a", "a"), ("q", "b", "a"), ("r", "z", "z")
+    ]
 
 
 def test_two_components_string_ids(spark):
@@ -77,9 +94,9 @@ def test_dense_random_graph_matches_union_find(spark):
     assert got == expected
 
 
-def test_fast_path_matches_distributed_loop(spark):
-    """The single-task union-find (small_graph_edges default) and the
-    alternating-star loop (forced with small_graph_edges=0) must emit identical
+def test_fast_path_matches_distributed_loop(spark, monkeypatch):
+    """The single-task union-find (SMALL_GRAPH_EDGES default) and the
+    alternating-star loop (forced with SMALL_GRAPH_EDGES=0) must emit identical
     min-id labels — the threshold moves only the physical strategy."""
     import random
 
@@ -87,22 +104,18 @@ def test_fast_path_matches_distributed_loop(spark):
     pairs = [(rng.randrange(300), rng.randrange(300)) for _ in range(250)]
     edges = spark.createDataFrame(pairs, "src long, dst long")
     fast = {r["id"]: r["component"] for r in connected_components(edges).collect()}
-    dist = {
-        r["id"]: r["component"]
-        for r in connected_components(edges, small_graph_edges=0).collect()
-    }
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
+    dist = {r["id"]: r["component"] for r in connected_components(edges).collect()}
     assert fast == dist
 
 
-def test_fast_path_matches_distributed_loop_string_ids(spark):
+def test_fast_path_matches_distributed_loop_string_ids(spark, monkeypatch):
     edges = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("x", "y"), ("m", "x")], "src string, dst string"
     )
     fast = {r["id"]: r["component"] for r in connected_components(edges).collect()}
-    dist = {
-        r["id"]: r["component"]
-        for r in connected_components(edges, small_graph_edges=0).collect()
-    }
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
+    dist = {r["id"]: r["component"] for r in connected_components(edges).collect()}
     assert fast == dist == {"a": "a", "b": "a", "c": "a", "x": "m", "y": "m", "m": "m"}
 
 

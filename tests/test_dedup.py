@@ -197,21 +197,24 @@ def test_session_memo_shares_subtree_until_cleared(spark, tmp_path, monkeypatch)
     """Within one pass, cc_jaccard_docs reuses the jaccard edge frame that
     jaccard_pairs_docs built; clear_session_memo() forces a rebuild."""
     from entity_resolution_spark import queries as Q
+    from entity_resolution_spark.operators import components
 
     spark.createDataFrame(DOCS, SCHEMA).write.parquet(str(tmp_path / "documents.parquet"))
     builds = {"jaccard_pairs": 0, "connected_components": 0}
 
-    def counted(name):
-        fn = getattr(Q, name)
+    def counted(module, name):
+        fn = getattr(module, name)
 
         def wrapper(*args, **kwargs):
             builds[name] += 1
             return fn(*args, **kwargs)
 
-        monkeypatch.setattr(Q, name, wrapper)
+        monkeypatch.setattr(module, name, wrapper)
 
-    counted("jaccard_pairs")
-    counted("connected_components")
+    counted(Q, "jaccard_pairs")
+    # queries label through components.label_components, which looks
+    # connected_components up in its own module
+    counted(components, "connected_components")
     sf_dir = str(tmp_path)
     Q.clear_session_memo()
     pairs = Q.QUERIES["jaccard_pairs_docs"](spark, sf_dir).collect()

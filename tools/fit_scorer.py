@@ -32,6 +32,7 @@ from entity_resolution_spark.plans.pipeline import (  # noqa: E402
     PipelineConfig,
     extract_features,
     pipeline_vectors,
+    surrogate_ids,
 )
 from entity_resolution_spark.session import get_spark  # noqa: E402
 from entity_resolution_spark.synth.generator import SynthConfig, corpus_dataframes  # noqa: E402
@@ -72,21 +73,19 @@ def main() -> int:
     spark = get_spark("fit-scorer")
     rf, gt, lp = corpus_dataframes(spark, SynthConfig(seed=args.seed, n_entities=args.entities))
     cfg = PipelineConfig()
-    feats = extract_features(rf, cfg).persist()
+    feats = surrogate_ids(extract_features(rf, cfg)).persist()
     vec = pipeline_vectors(feats)
 
     # train on ALL labeled pairs (the exhaustive within-block pairs include the
-    # cross-entity negatives that blocking correctly never co-blocks)
-    all_pairs = lp.select(
-        F.col("unique_id_a").alias("id_a"),
-        F.col("unique_id_b").alias("id_b"),
-        F.lit(False).alias("is_exact"),
-    )
-    pf = build_pair_features(all_pairs, feats, vec)
+    # cross-entity negatives that blocking correctly never co-blocks), keyed by
+    # the same surrogate ids as the features
     labels = lp.select(
-        F.col("unique_id_a").alias("id_a"),
-        F.col("unique_id_b").alias("id_b"),
+        F.xxhash64("unique_id_a").alias("id_a"),
+        F.xxhash64("unique_id_b").alias("id_b"),
         F.col("label").cast("int").alias("y"),
+    )
+    pf = build_pair_features(
+        labels.select("id_a", "id_b", F.lit(False).alias("is_exact")), feats, vec
     )
     data = pf.join(labels, ["id_a", "id_b"]).select(*PAIR_FEATURES, "y").collect()
     x = np.array([[r[c] or 0.0 for c in PAIR_FEATURES] for r in data])

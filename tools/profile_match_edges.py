@@ -22,6 +22,7 @@ from entity_resolution_spark.plans.pipeline import (  # noqa: E402
     bump_block_sizes,
     extract_features,
     pipeline_vectors,
+    surrogate_ids,
 )
 from entity_resolution_spark.session import get_spark  # noqa: E402
 
@@ -39,11 +40,7 @@ def main() -> int:
         print(f"T {name}: {time.monotonic() - t0:.1f}s", flush=True)
         return r
 
-    # int64 surrogate ids, as resolve() uses from the vectors stage on (the
-    # pair kernel's output schema declares long ids)
-    feats = extract_features(rf, cfg).withColumn(
-        "unique_id", F.xxhash64("unique_id")
-    ).persist()
+    feats = surrogate_ids(extract_features(rf, cfg)).persist()
     t("warm_features", lambda: feats.count())
     vec = pipeline_vectors(feats).persist()
     t("warm_vectors", lambda: vec.count())
