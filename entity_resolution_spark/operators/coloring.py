@@ -171,7 +171,7 @@ def colour_negative_edges_split(
         ]
     )
 
-    def recolour(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def recolour(key, pdf):
         ids = sorted(pdf.loc[pdf["kind"] == "n", "a"].unique())
         idx = {v: i for i, v in enumerate(ids)}
         pos_l = [

@@ -157,7 +157,7 @@ def contamination_counts(exploded: DataFrame, ev: DataFrame, group_cols) -> Data
     # materialize the eval set ONCE before the checks and the join: the
     # sentinel presence check and the broadcast join would otherwise each
     # evaluate its subtree (explode+distinct over the eval corpus)
-    ev = F.broadcast(ev.withColumn("_hit", F.lit(1)).localCheckpoint(eager=True))
+    ev = ev.withColumn("_hit", F.lit(1)).localCheckpoint(eager=True)
     # kernel-version check: a set persisted under an OLD bigint kernel
     # passes the dtype assert but would silently match nothing; require the
     # current kernel's sentinel row (one tiny job at plan-build time — the
@@ -177,7 +177,7 @@ def contamination_counts(exploded: DataFrame, ev: DataFrame, group_cols) -> Data
         )
     ev = ev.where(F.col("ngram") != sent)
     return (
-        exploded.join(ev, "ngram", "left")
+        exploded.join(F.broadcast(ev), "ngram", "left")
         .groupBy(*group_cols)
         .agg(
             F.count("ngram").cast("bigint").alias("total_ngrams"),

@@ -117,7 +117,7 @@ def incremental_cluster_blocks(
         ]
     )
 
-    def fit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit(key, pdf):
         pdf = pdf.sort_values(["_ord", "_id"], kind="mergesort").reset_index(drop=True)
         x = np.asarray(pdf["_vec"].tolist(), dtype=np.float64)
         labels = incremental_labels(x, threshold, strategy)

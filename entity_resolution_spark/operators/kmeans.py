@@ -135,7 +135,7 @@ def cluster_blocks_with_algo(
         ]
     )
 
-    def fit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit(key, pdf):
         pdf = pdf.sort_values("_id", kind="mergesort").reset_index(drop=True)
         x = np.asarray(pdf["_vec"].tolist(), dtype=np.float64)
         labels = np.asarray(algorithm(x))
@@ -176,7 +176,7 @@ def kmeans_cluster_blocks(
         ]
     )
 
-    def fit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit(key, pdf):
         pdf = pdf.sort_values("_id", kind="mergesort").reset_index(drop=True)
         x = np.asarray(pdf["_vec"].tolist(), dtype=np.float64)
         labels = kmeans_silhouette_labels(x, seed=seed, max_k=max_k)

@@ -176,7 +176,7 @@ def spectral_cluster_blocks_gated(
         ]
     )
 
-    def fit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit(key, pdf):
         ids = pdf["_id"].tolist()
         feats = [
             [str(v).lower().strip() for v in row if v is not None]
@@ -220,7 +220,7 @@ def spectral_cluster_blocks(
         ]
     )
 
-    def fit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit(key, pdf):
         ids = pdf["_id"].tolist()
         feats = [
             [str(v).lower().strip() for v in row if v is not None]

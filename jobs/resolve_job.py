@@ -11,6 +11,15 @@
 On a cluster the session comes from spark-submit's conf (executors, shuffle
 partitions, AQE); locally it falls back to local[*]. The same job ran at
 local[8] and local[32] produces identical clusters (tests/test_determinism_resume).
+
+The session comes from a bare ``SparkSession.builder`` (or the one already
+running in-process), not from ``session.get_spark``, so spark-submit does not
+start Python workers from the engine's daemon (``worker_daemon``, which skips
+the per-task re-read of unchanged import archives, over 100 ms of CPU per
+Python task). Where the package is installed on the workers, pass
+``--conf spark.python.daemon.module=entity_resolution_spark.worker_daemon``.
+With ``--py-files`` alone leave it out: the zip reaches a worker per task,
+after the daemon has started, so the daemon module cannot be imported.
 """
 
 from __future__ import annotations

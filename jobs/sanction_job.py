@@ -21,6 +21,15 @@ over the selected features ≥ th → edge → CC; cluster id = min sanction_id 
 the component. Everything is DataFrame-planar: the adjacency is the same
 inverted-index operator the flagship pipeline uses, CC is large-star/small-star
 with the small-graph union-find fast path — no driver-side loops over records.
+
+The session comes from a bare ``SparkSession.builder`` (or the one already
+running in-process), not from ``session.get_spark``, so spark-submit does not
+start Python workers from the engine's daemon (``worker_daemon``, which skips
+the per-task re-read of unchanged import archives, over 100 ms of CPU per
+Python task). Where the package is installed on the workers, pass
+``--conf spark.python.daemon.module=entity_resolution_spark.worker_daemon``.
+With ``--py-files`` alone leave it out: the zip reaches a worker per task,
+after the daemon has started, so the daemon module cannot be imported.
 """
 
 from __future__ import annotations
