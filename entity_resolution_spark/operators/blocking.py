@@ -61,6 +61,10 @@ class BlockingConfig:
     use_minhash: bool = True
     use_fingerprints: bool = True   # winnowing fingerprints — copy-detection blocker
 
+    def __post_init__(self):
+        if self.block_cap < 2:
+            raise ValueError(f"block_cap must be >= 2, got {self.block_cap}")
+
 
 def exact_sha_blocks(features: DataFrame) -> DataFrame:
     """(unique_id, block_key) for exact-content duplicates: lang + content-sha prefix.

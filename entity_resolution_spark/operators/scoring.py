@@ -48,6 +48,14 @@ class ScorerWeights:
     large_block_bump: float = 0.02   # ref: +0.02 over 400 records
     large_block_size: int = 400
 
+    def __post_init__(self):
+        if len(self.weights) != len(PAIR_FEATURES):
+            raise ValueError(f"weights needs one entry per PAIR_FEATURES: {self.weights}")
+        if not 0 < self.threshold < 1:
+            raise ValueError(f"threshold must be in (0, 1), got {self.threshold}")
+        if self.large_block_size < 1:
+            raise ValueError(f"large_block_size must be >= 1, got {self.large_block_size}")
+
 
 def build_pair_features(
     pairs: DataFrame,

@@ -6,19 +6,21 @@ re-run fetch what exists and process only the difference
 
 Backends (selected per store, nothing else in the pipeline changes):
 
-- **Parquet** (default): one directory per stage under ``root``, plus a
-  ``_lineage`` JSON sidecar carrying run_id, stage name, row count, input
-  signature. This is what the sandbox tests exercise.
-- **Iceberg** (config-gated — the north rule's "checkpointing ... to
-  Iceberg"): when the session has an Iceberg catalog configured
-  (``spark.sql.catalog.<name> = org.apache.iceberg.spark.SparkCatalog``) —
-  or the caller passes ``catalog=`` explicitly — stage writes route through
+- **Parquet** (default, ``catalog=None`` or ``""``): one directory per stage
+  under ``root``. This is what the sandbox tests exercise.
+- **Iceberg** (explicit ``catalog=`` — the north rule's "checkpointing ... to
+  Iceberg"): stage writes route through
   ``df.writeTo(<catalog>.<namespace>.<stage>).createOrReplace()`` and reads
   through ``spark.read.table``, giving snapshot isolation + atomic replace
-  per stage. The SAME lineage sidecars are kept next to the parquet root so
-  ``has()``/resume semantics are identical across backends, and a parity
-  test (auto-skipped when the Iceberg runtime jar is absent, as it is in
-  this sandbox) asserts both backends reproduce identical clusters.
+  per stage. A catalog that cannot be used raises; the store never picks a
+  backend from the session conf. A parity test (auto-skipped when the
+  Iceberg runtime jar is absent, as it is in this sandbox) asserts both
+  backends reproduce identical clusters.
+
+Both backends keep a ``_lineage`` JSON sidecar per stage under ``root``
+(run_id, stage, backend, row count, input signature), so ``has()``/resume
+semantics are identical across them. A stage whose sidecar names the other
+backend is recomputed, never read.
 """
 
 from __future__ import annotations
@@ -27,43 +29,16 @@ import json
 import os
 import re
 import time
-import warnings
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def detect_iceberg_catalog(spark: SparkSession) -> str | None:
-    """Name of a configured Iceberg catalog, or None.
-
-    Scans ``spark.sql.catalog.<name>`` entries (context conf + runtime SET
-    output) for an implementation class mentioning ``iceberg``. Explicitly
-    passing ``catalog=`` to :class:`CheckpointStore` always wins — this is
-    the zero-config convenience for clusters whose session ships one.
-    """
-    pat = re.compile(r"^spark\.sql\.catalog\.([A-Za-z0-9_]+)$")
-    entries: list[tuple[str, str]] = []
-    try:
-        entries.extend(spark.sparkContext.getConf().getAll())
-    except Exception:
-        pass
-    try:
-        entries.extend(
-            (r["key"], r["value"]) for r in spark.sql("SET").collect()
-        )
-    except Exception:
-        pass
-    for k, v in entries:
-        m = pat.match(k)
-        if m and "iceberg" in str(v).lower():
-            return m.group(1)
-    return None
 
 
 @dataclass
 class StageLineage:
     run_id: str
     stage: str
+    backend: str
     rows: int
     input_signature: str
     wall_sec: float
@@ -75,10 +50,8 @@ class CheckpointStore:
     reused iff its input signature matches (resume-from-checkpoint
     mid-pipeline).
 
-    ``catalog``: Iceberg catalog name. ``None`` (default) auto-detects via
-    :func:`detect_iceberg_catalog` and falls back to parquet directories when
-    no catalog is configured; pass a name to force the Iceberg backend or
-    ``catalog=""`` to force parquet.
+    ``catalog``: Iceberg catalog name for the Iceberg backend; ``None`` or
+    ``""`` (default) keeps the stages in parquet directories under ``root``.
     """
 
     def __init__(
@@ -94,35 +67,13 @@ class CheckpointStore:
         self.run_id = run_id
         os.makedirs(root, exist_ok=True)
         self.stage_seconds: dict[str, float] = {}
-        auto_detected = catalog is None
-        self.catalog = (
-            catalog if catalog is not None else detect_iceberg_catalog(spark)
-        ) or None
+        self.catalog = catalog or None
+        self.backend = "iceberg" if self.catalog else "parquet"
         self.namespace = namespace
         if self.catalog:
-            try:
-                spark.sql(
-                    f"CREATE NAMESPACE IF NOT EXISTS "
-                    f"{self.catalog}.{self.namespace}"
-                )
-            except Exception:
-                # an AUTO-detected catalog may reference an Iceberg extension
-                # whose runtime jar is absent or whose warehouse is
-                # misconfigured — a store that worked on parquet yesterday
-                # must not start throwing because an unrelated conf entry
-                # appeared; fall back to the parquet backend with a warning.
-                # An EXPLICIT catalog= keeps the hard failure: the caller
-                # asked for Iceberg specifically (ADVICE r4).
-                if not auto_detected:
-                    raise
-                warnings.warn(
-                    f"CheckpointStore: auto-detected Iceberg catalog "
-                    f"{self.catalog!r} is unusable (namespace creation "
-                    f"failed); falling back to the parquet backend",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-                self.catalog = None
+            spark.sql(
+                f"CREATE NAMESPACE IF NOT EXISTS {self.catalog}.{self.namespace}"
+            )
 
     def _dir(self, stage: str) -> str:
         return os.path.join(self.root, stage)
@@ -140,7 +91,10 @@ class CheckpointStore:
             return False
         with open(lp) as f:
             lin = json.load(f)
-        return lin.get("input_signature") == input_signature
+        return (
+            lin.get("input_signature") == input_signature
+            and lin.get("backend") == self.backend
+        )
 
     def read(self, stage: str) -> DataFrame:
         if self.catalog:
@@ -173,6 +127,7 @@ class CheckpointStore:
         lin = StageLineage(
             run_id=self.run_id,
             stage=stage,
+            backend=self.backend,
             rows=rows,
             input_signature=input_signature,
             wall_sec=wall,

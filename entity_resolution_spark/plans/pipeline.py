@@ -60,6 +60,10 @@ class PipelineConfig:
     blocking: BlockingConfig = field(default_factory=BlockingConfig)
     scorer: ScorerWeights = field(default_factory=ScorerWeights)
 
+    def __post_init__(self):
+        if self.shingle_k < 1:
+            raise ValueError(f"shingle_k must be >= 1, got {self.shingle_k}")
+
 
 def extract_features(
     repo_files: DataFrame, cfg: PipelineConfig, keep: list[str] | None = None

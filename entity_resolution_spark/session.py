@@ -1,5 +1,22 @@
 """SparkSession factory tuned for this engine.
 
+``get_spark`` is the one way the engine builds a session (library, tools,
+``jobs/`` and benchmarks alike), under two rules:
+
+- **The launch conf wins over the defaults.** A default fills only a key that
+  the launch conf leaves unset; explicit arguments (``master=``,
+  ``shuffle_partitions=``, ``extra_conf=``) always apply. The launch conf is
+  the running session's conf, else the JVM's when its gateway is already up
+  (spark-submit starts it holding every ``--master`` and ``--conf``). It is
+  never read by starting the JVM: driver settings such as
+  ``spark.driver.memory`` take effect only if the builder's conf starts it.
+- **The worker daemon, the workers' ``PYTHONPATH`` and ``spark.local.dir``
+  on local masters only**, where the workers share the driver's files and
+  disks. On a cluster a ``--py-files``
+  zip reaches a worker per task, after the daemon has started; where the
+  package is installed on the workers, pass
+  ``--conf spark.python.daemon.module=entity_resolution_spark.worker_daemon``.
+
 Local-mode defaults mirror what we would set on a real cluster: AQE on (runtime
 coalescing + skew-join splitting), shuffle partitions sized to cores, Arrow enabled
 for the pandas-UDF scoring path, UTC session timezone so results compare bit-for-bit
@@ -19,7 +36,24 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+_SEP = "\u0001"  # joins a running session's conf into one py4j reply
+
+
+def _launch_conf() -> dict[str, str]:
+    """The conf a session starts from before ``get_spark`` adds to it (see the
+    module docstring); empty when no JVM is up."""
+    if SparkContext._active_spark_context is not None:
+        jconf = SparkSession.builder.getOrCreate()._jsparkSession.conf()
+        entries, sep = jconf.getAll().mkString(_SEP).split(_SEP), " -> "
+    elif SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        SparkContext._ensure_initialized()  # joins the gateway; starts no JVM
+        entries, sep = SparkConf().toDebugString().splitlines(), "="
+    else:
+        return {}
+    return dict(e.split(sep, 1) for e in entries if sep in e)
 
 
 def get_spark(
@@ -30,27 +64,32 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-aware defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or ``local[*]``.
-    ``shuffle_partitions`` defaults to the parallelism of the master (local mode)
-    so small runs don't over-partition; on a real cluster leave it to AQE.
+    ``master`` defaults to the launch conf's, else ``local[$SPARK_GRAFT_CPUS]``
+    (env) or ``local[*]``. ``shuffle_partitions`` defaults to the launch conf's,
+    else the parallelism of a local master (at least 8) so small runs don't
+    over-partition; on a real cluster leave it to AQE. ``app_name`` is a default
+    too: a running session or a spark-submit ``--name`` keeps its own.
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        if master.startswith("local[") and master[6:-1] not in ("*", ""):
-            shuffle_partitions = max(8, int(master[6:-1]))
-        else:
-            shuffle_partitions = max(8, os.cpu_count() or 8)
+    launch = _launch_conf()
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    effective_master = (
+        master or launch.get("spark.master") or f"local[{cpus or '*'}]"
+    )
+    n = effective_master[6:-1] if effective_master.startswith("local[") else ""
+    parts = (
+        shuffle_partitions
+        or launch.get("spark.sql.shuffle.partitions")
+        or max(8, int(n) if n.isdigit() else os.cpu_count() or 8)
+    )
 
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+    defaults = {
+        "spark.master": effective_master,
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(parts),
+        "spark.default.parallelism": str(parts),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
         # Finer AQE granularity than the 64m/256m defaults: the pair join's
         # output rows are WIDE (two tfidf term/weight arrays ride into the
         # scoring kernel), so a "small" partition by byte count is a lot of
@@ -59,19 +98,17 @@ def get_spark(
         # 128-partition scoring stage — AQE never split it because the skewed
         # partition was < 256m. 32m advisory + factor-2 skew split cut the
         # stage span 44.6s -> 21.8s and whole-job wall 248s -> 200s.
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32m")
-        .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        .config(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64m"
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32m",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64m",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # 3.3x the 10k default: the Arrow kernels (tokenizer, run-assembler,
         # pair scorer) amortize per-batch pandas construction; measured -3s
         # on the 703k-file job at local[16]. Peak per-worker batch memory is
         # bounded by the widest stage (~3 KB/row tokenizer input ≈ 100 MB).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32768")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "32768",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # The default 100-entry whole-stage-codegen class cache thrashes under
         # this engine's query mix: one pass over the ~33 bench queries at
         # sf0.1 generates enough distinct generated classes (AQE re-plans,
@@ -80,16 +117,16 @@ def get_spark(
         # 16.5s vs 5.5s warm for colour_split_docs. 3000 entries ≈ tens of MB
         # of metaspace, the right trade for any long-lived session (notebook,
         # streaming driver, bench harness).
-        .config("spark.sql.codegen.cache.maxEntries", "3000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
+        "spark.sql.codegen.cache.maxEntries": "3000",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.ui.enabled": "false",
         # tokenization/shingling costs ~100× the scan I/O per byte, so scan
         # partitions must be small enough to use every core (158 MB of snappy
         # parquet at the default 128 MB yields 8 partitions — an 8-way cap on
         # the feature stage no matter the executor count). 8 MB ≈ one compressed
         # partition per ~2-3s of feature compute.
-        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-        .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
+        "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
+        "spark.sql.files.openCostInBytes": str(1024 * 1024),
         # zstd shuffle/broadcast compression instead of lz4: the job is
         # memory-bandwidth-bound at high core counts (membw_probe, PLANS.md),
         # so halving shuffle bytes through /dev/shm buys more than the extra
@@ -98,31 +135,34 @@ def get_spark(
         # 44.0s), local[4] 193.3 vs 194.2s (a wash — CPU-bound there, as
         # expected). Identical clusters. On a real cluster this also shrinks
         # network shuffle, the same trade in the same direction.
-        .config("spark.io.compression.codec", "zstd")
+        "spark.io.compression.codec": "zstd",
+    }
+    if effective_master.startswith("local"):
         # Python workers import this package inside UDFs; put its parent
         # directory on their path so a driver started from any working
         # directory (a tool run from outside the checkout) still finds it.
-        # The same path lets Spark start the workers from worker_daemon
-        # (see the module docstring)
-        .config(
-            "spark.executorEnv.PYTHONPATH",
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        # The same path lets Spark start the workers from worker_daemon.
+        defaults["spark.executorEnv.PYTHONPATH"] = os.path.dirname(
+            os.path.dirname(os.path.abspath(__file__))
         )
-        .config(
-            "spark.python.daemon.module", "entity_resolution_spark.worker_daemon"
-        )
-    )
-    # local-mode shuffle goes through spark.local.dir; the sandbox disk writes at
-    # ~260 MB/s while /dev/shm does ~1.8 GB/s — a wide-row shuffle (pair-feature
-    # arrays) is disk-bound otherwise. On a real cluster this is NVMe scratch +
-    # netty shuffle, so this knob is local-mode only.
-    local_dir = os.environ.get("SPARK_LOCAL_DIRS")
-    if local_dir is None and os.path.isdir("/dev/shm"):
-        local_dir = "/dev/shm/spark-local"
-    if local_dir:
-        builder = builder.config("spark.local.dir", local_dir)
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+        defaults["spark.python.daemon.module"] = "entity_resolution_spark.worker_daemon"
+        # local-mode shuffle goes through spark.local.dir; the sandbox disk
+        # writes at ~260 MB/s while /dev/shm does ~1.8 GB/s — a wide-row
+        # shuffle (pair-feature arrays) is disk-bound otherwise. On a real
+        # cluster this is NVMe scratch + netty shuffle.
+        local_dir = os.environ.get("SPARK_LOCAL_DIRS")
+        if local_dir is None and os.path.isdir("/dev/shm"):
+            local_dir = "/dev/shm/spark-local"
+        if local_dir:
+            defaults["spark.local.dir"] = local_dir
+
+    conf = {k: v for k, v in defaults.items() if k not in launch}
+    if master is not None:
+        conf["spark.master"] = master
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+        conf["spark.default.parallelism"] = str(shuffle_partitions)
+    conf.update(extra_conf or {})
+    spark = SparkSession.builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

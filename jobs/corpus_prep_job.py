@@ -37,14 +37,8 @@ frame is eagerly localCheckpoint'ed at the stage boundary so the funnel
 count and the following stages read the materialized survivors instead of
 re-running the whole upstream lineage per action.
 
-The session comes from a bare ``SparkSession.builder`` (or the one already
-running in-process), not from ``session.get_spark``, so spark-submit does not
-start Python workers from the engine's daemon (``worker_daemon``, which skips
-the per-task re-read of unchanged import archives, over 100 ms of CPU per
-Python task). Where the package is installed on the workers, pass
-``--conf spark.python.daemon.module=entity_resolution_spark.worker_daemon``.
-With ``--py-files`` alone leave it out: the zip reaches a worker per task,
-after the daemon has started, so the daemon module cannot be imported.
+The session comes from ``session.get_spark``; its docstring says which
+spark-submit settings win and when Python workers use the engine's daemon.
 """
 
 from __future__ import annotations
@@ -55,7 +49,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from entity_resolution_spark.session import get_spark  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 
@@ -109,8 +103,7 @@ def main() -> int:
     from entity_resolution_spark.operators.repetition import repetition_stats
     from entity_resolution_spark.operators.sampling import token_budget_sample
 
-    spark = SparkSession.builder.appName("corpus-prep").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("corpus-prep")
 
     from entity_resolution_spark.functions.text import ws_tokens
 

@@ -12,14 +12,8 @@ On a cluster the session comes from spark-submit's conf (executors, shuffle
 partitions, AQE); locally it falls back to local[*]. The same job ran at
 local[8] and local[32] produces identical clusters (tests/test_determinism_resume).
 
-The session comes from a bare ``SparkSession.builder`` (or the one already
-running in-process), not from ``session.get_spark``, so spark-submit does not
-start Python workers from the engine's daemon (``worker_daemon``, which skips
-the per-task re-read of unchanged import archives, over 100 ms of CPU per
-Python task). Where the package is installed on the workers, pass
-``--conf spark.python.daemon.module=entity_resolution_spark.worker_daemon``.
-With ``--py-files`` alone leave it out: the zip reaches a worker per task,
-after the daemon has started, so the daemon module cannot be imported.
+The session comes from ``session.get_spark``; its docstring says which
+spark-submit settings win and when Python workers use the engine's daemon.
 """
 
 from __future__ import annotations
@@ -31,7 +25,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from entity_resolution_spark.session import get_spark  # noqa: E402
 
 
 def main() -> int:
@@ -52,8 +46,7 @@ def main() -> int:
     )
     from entity_resolution_spark.qa.metrics import pairwise_f1
 
-    spark = SparkSession.builder.appName("er-resolve").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("er-resolve")
 
     if args.format == "iceberg":
         repo_files = spark.read.table(args.input)

@@ -22,14 +22,8 @@ the component. Everything is DataFrame-planar: the adjacency is the same
 inverted-index operator the flagship pipeline uses, CC is large-star/small-star
 with the small-graph union-find fast path — no driver-side loops over records.
 
-The session comes from a bare ``SparkSession.builder`` (or the one already
-running in-process), not from ``session.get_spark``, so spark-submit does not
-start Python workers from the engine's daemon (``worker_daemon``, which skips
-the per-task re-read of unchanged import archives, over 100 ms of CPU per
-Python task). Where the package is installed on the workers, pass
-``--conf spark.python.daemon.module=entity_resolution_spark.worker_daemon``.
-With ``--py-files`` alone leave it out: the zip reaches a worker per task,
-after the daemon has started, so the daemon module cannot be imported.
+The session comes from ``session.get_spark``; its docstring says which
+spark-submit settings win and when Python workers use the engine's daemon.
 """
 
 from __future__ import annotations
@@ -41,7 +35,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from entity_resolution_spark.session import get_spark  # noqa: E402
 
 PERSON_DEFAULT_FEATURES = ["alias_keyword"]
 ORG_DEFAULT_FEATURES = ["org_alias_keyword", "org_ids"]
@@ -94,7 +88,7 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.appName("sanction_resolve").getOrCreate()
+    spark = get_spark("sanction_resolve")
     records = spark.read.parquet(args.input)
     if "entity_type" in records.columns:
         records = records.where(F.col("entity_type") == args.entity_type)

@@ -32,20 +32,29 @@ print("RESULT" + json.dumps(rows))
 """
 
 
-def _run(cores: int) -> list:
-    p = subprocess.run(
+def _start(cores: int) -> subprocess.Popen:
+    return subprocess.Popen(
         [sys.executable, "-c", CHILD.format(repo=REPO), str(cores)],
-        capture_output=True,
+        stdout=subprocess.PIPE,
+        stderr=subprocess.PIPE,
         text=True,
-        timeout=900,
     )
-    lines = [l for l in p.stdout.splitlines() if l.startswith("RESULT")]
-    assert lines, p.stderr[-3000:]
+
+
+def _result(p: subprocess.Popen) -> list:
+    out, err = p.communicate(timeout=900)
+    lines = [l for l in out.splitlines() if l.startswith("RESULT")]
+    assert lines, err[-3000:]
     return json.loads(lines[-1][len("RESULT"):])
 
 
 def test_identical_output_across_parallelism():
-    assert _run(2) == _run(8)
+    procs = [_start(2), _start(8)]  # both JVMs run at once
+    try:
+        assert _result(procs[0]) == _result(procs[1])
+    finally:
+        for p in procs:
+            p.kill()  # a no-op on a child that has exited
 
 
 def test_resume_reproduces_identical_clusters(spark, tmp_path):
@@ -78,18 +87,15 @@ def test_resume_reproduces_identical_clusters(spark, tmp_path):
 
 
 def test_iceberg_backend_parity(spark, tmp_path):
-    """Config-gated Iceberg backend (north rule: "checkpointing ... to
-    Iceberg"): with an Iceberg catalog configured, stage writes route through
+    """Iceberg backend (north rule: "checkpointing ... to Iceberg"): with
+    an Iceberg catalog passed as ``catalog=``, stage writes route through
     writeTo(...).createOrReplace() and the resolved clusters must be
     IDENTICAL to the parquet backend's. Auto-skips when the Iceberg runtime
-    jar is absent (as in this sandbox) — the fallback path is what every
+    jar is absent (as in this sandbox) — the parquet path is what every
     other checkpoint test exercises."""
     import pytest
 
-    from entity_resolution_spark.plans.checkpoint import (
-        CheckpointStore,
-        detect_iceberg_catalog,
-    )
+    from entity_resolution_spark.plans.checkpoint import CheckpointStore
     from entity_resolution_spark.plans.pipeline import PipelineConfig, resolve
     from entity_resolution_spark.synth.generator import SynthConfig, corpus_dataframes
 
@@ -105,8 +111,6 @@ def test_iceberg_backend_parity(spark, tmp_path):
         "spark.sql.catalog.ckpt_test.warehouse", str(tmp_path / "warehouse")
     )
     try:
-        assert detect_iceberg_catalog(spark) == "ckpt_test"
-
         rf, _, _ = corpus_dataframes(spark, SynthConfig(seed=11, n_entities=15))
 
         def _clusters(store):
@@ -142,19 +146,46 @@ def test_iceberg_backend_parity(spark, tmp_path):
 
 
 def test_parquet_fallback_without_catalog(spark, tmp_path):
-    """No Iceberg catalog configured → detect returns None and the store
-    stays on parquet (the sandbox default every resume test runs on)."""
-    from entity_resolution_spark.plans.checkpoint import (
-        CheckpointStore,
-        detect_iceberg_catalog,
+    """No ``catalog=`` keeps the store on parquet, even when the session
+    conf names an Iceberg catalog; an explicit catalog that cannot be used
+    raises instead of falling back."""
+    import pytest
+
+    from entity_resolution_spark.plans.checkpoint import CheckpointStore
+
+    spark.conf.set(
+        "spark.sql.catalog.bogus_ice", "org.apache.iceberg.spark.SparkCatalog"
     )
+    try:
+        store = CheckpointStore(spark, str(tmp_path / "ck"))
+        assert store.catalog is None
+        store.write("s1", spark.range(5).toDF("n"), "sig")
+        assert store.read("s1").count() == 5  # parquet path really works
 
-    if detect_iceberg_catalog(spark) is not None:
-        import pytest
+        with pytest.raises(Exception):
+            CheckpointStore(spark, str(tmp_path / "ck2"), catalog="bogus_ice")
+    finally:
+        spark.conf.unset("spark.sql.catalog.bogus_ice")
 
-        pytest.skip("session carries a real Iceberg catalog config")
-    store = CheckpointStore(spark, str(tmp_path / "ck"))
-    assert store.catalog is None
+
+def test_stage_of_another_backend_is_recomputed(spark, tmp_path):
+    """Each sidecar records the backend that wrote the stage; a store on the
+    other backend treats the stage as absent and recomputes it."""
+    from entity_resolution_spark.plans.checkpoint import CheckpointStore
+
+    store = CheckpointStore(spark, str(tmp_path / "ck"), catalog="")
+    store.write("s1", spark.range(3).toDF("n"), "sig")
+    assert store.has("s1", "sig")
+    lp = os.path.join(store.root, "s1._lineage.json")
+    with open(lp) as f:
+        lin = json.load(f)
+    assert lin["backend"] == "parquet"
+    with open(lp, "w") as f:
+        json.dump({**lin, "backend": "iceberg"}, f)
+    assert not store.has("s1", "sig")
+    out = store.get_or_compute("s1", lambda: spark.range(7).toDF("n"), "sig")
+    assert out.count() == 7
+    assert store.has("s1", "sig")
 
 
 def test_interrupted_rewrite_invalidates_stale_checkpoint(spark, tmp_path):
@@ -182,34 +213,3 @@ def test_interrupted_rewrite_invalidates_stale_checkpoint(spark, tmp_path):
     # the store recovers: the next get_or_compute recomputes cleanly
     out = store.get_or_compute("stage_a", lambda: df, input_signature="v1")
     assert out.count() == 10
-
-
-def test_unusable_autodetected_catalog_falls_back_to_parquet(spark, tmp_path):
-    """ADVICE r4: a session conf that merely MENTIONS an Iceberg catalog
-    (jar absent / warehouse broken) must not break a store that previously
-    worked on parquet — auto-detection falls back with a warning.  An
-    EXPLICIT catalog= keeps the hard failure."""
-    import warnings as _w
-
-    import pytest
-
-    from entity_resolution_spark.plans.checkpoint import CheckpointStore
-
-    spark.conf.set(
-        "spark.sql.catalog.bogus_ice", "org.apache.iceberg.spark.SparkCatalog"
-    )
-    try:
-        with _w.catch_warnings(record=True) as rec:
-            _w.simplefilter("always")
-            store = CheckpointStore(spark, str(tmp_path / "ck"))
-        assert store.catalog is None  # parquet fallback
-        assert any("falling back to the parquet backend" in str(w.message)
-                   for w in rec)
-        df = spark.range(5).toDF("n")
-        store.write("s1", df, "sig")
-        assert store.read("s1").count() == 5  # parquet path really works
-
-        with pytest.raises(Exception):
-            CheckpointStore(spark, str(tmp_path / "ck2"), catalog="bogus_ice")
-    finally:
-        spark.conf.unset("spark.sql.catalog.bogus_ice")

@@ -6,6 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from entity_resolution_spark.operators.blocking import BlockingConfig
+from entity_resolution_spark.operators.scoring import ScorerWeights
 from entity_resolution_spark.plans.pipeline import (
     PipelineConfig,
     audit_content_sha,
@@ -92,3 +94,22 @@ def test_boilerplate_family_emits_linear_pairs(spark):
     assert fam == 1                      # whole family is one cluster
     assert n_clusters == 21              # 1 family + 20 singletons
     assert n_pairs < 300 * 4, n_pairs    # linear in family size, not n^2/cap
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda: PipelineConfig(shingle_k=0),
+        lambda: BlockingConfig(block_cap=1),
+        lambda: ScorerWeights(weights=(9.0, 5.0)),
+        lambda: ScorerWeights(threshold=0.0),
+        lambda: ScorerWeights(threshold=1.0),
+        lambda: ScorerWeights(large_block_size=0),
+    ],
+    ids=["shingle_k", "block_cap", "weights_len", "threshold_0", "threshold_1",
+         "large_block_size"],
+)
+def test_bad_config_raises_when_built(build):
+    """A bad config fails when it is built, before any Spark job runs."""
+    with pytest.raises(ValueError):
+        build()
