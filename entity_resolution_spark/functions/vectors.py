@@ -139,7 +139,7 @@ def tfidf_vectors(
             .persist()
         )
         if persisted is not None:
-            persisted.append(tf)  # caller releases once downstream is materialized
+            persisted.append(tf)  # unpersisted at the caller's stage boundary
     vocab_filtered = min_df > 1
     # The Arrow kernel tiers ship the vocabulary as int64 numpy arrays and
     # re-derive the int32 term ids with a bit-exact numpy replica of Spark's
@@ -419,12 +419,12 @@ def _assemble_group_arrays(gids: np.ndarray, th: np.ndarray, w: np.ndarray, k_ca
 
 class _StagedVocabFile:
     """Deferred cleanup for the mmap tier's staged ``.npy``: quacks like a
-    persisted frame so it can ride the engine's ``persisted``/``release()``
-    convention (``pipeline.release`` calls ``unpersist()`` on every entry).
-    Executors verify the SOURCE file on their first fetch (Spark's
-    ``updateDependencies`` re-reads it), so it cannot be deleted at stage time
-    — only once downstream is materialized. An ``atexit`` hook bounds the leak
-    to the interpreter's lifetime for callers that never release."""
+    persisted frame so it can ride a ``persisted`` list (``pipeline.resolve``
+    unpersists every entry at the stage boundary). Executors verify the SOURCE
+    file on their first fetch (Spark's ``updateDependencies`` re-reads it), so
+    it cannot be deleted when the lazy frame is built — only once the stage is
+    materialized. An ``atexit`` hook bounds the leak to the interpreter's
+    lifetime for callers that pass no list."""
 
     def __init__(self, path: str):
         import atexit
@@ -507,7 +507,7 @@ def _assemble_vectors_arrow(
         spark.sparkContext.addFile(path)
         staged = _StagedVocabFile(path)
         if persisted is not None:
-            persisted.append(staged)  # removed by pipeline.release()
+            persisted.append(staged)  # removed at the caller's stage boundary
         vocab_src = ("file", fname)
     else:
         vocab_src = ("bc", spark.sparkContext.broadcast((vt, vi)))

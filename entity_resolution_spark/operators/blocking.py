@@ -416,7 +416,7 @@ def block_assignments(
     # DAGs; at cluster scale this is the stage checkpoint).
     asg = asg.persist()
     if persisted is not None:
-        persisted.append(asg)  # caller releases once downstream is materialized
+        persisted.append(asg)  # unpersisted at the caller's stage boundary
 
     # ONE sizing pass for every policy (was three groupBy+join rounds — each
     # shuffle barrier is fixed per-query-stage latency that caps scaling):

@@ -216,7 +216,7 @@ def cosine_threshold_clusters(
     embedding, or with a zero-norm one, are singletons labeled by their own id.
 
     ``emb`` is scanned by both sides of the pair join: the caller caches it,
-    and may release it once this returns (the components are computed here)."""
+    and may unpersist it once this returns (the components are computed here)."""
     from entity_resolution_spark.operators.components import label_components
 
     # zero-norm embeddings (a node whose neighborhood projection cancels, or

@@ -89,7 +89,7 @@ def build_pair_features(
         )
     feat = feat.persist()
     if persisted is not None:
-        persisted.append(feat)  # caller releases once downstream is materialized
+        persisted.append(feat)  # unpersisted at the caller's stage boundary
     a = feat.select(*[F.col(c).alias(f"{c}_a") for c in feat.columns])
     b = feat.select(*[F.col(c).alias(f"{c}_b") for c in feat.columns])
     # SHUFFLE_HASH on the feat probes: the feat rows are WIDE (two top-k

@@ -133,8 +133,16 @@ class CheckpointStore:
             wall_sec=wall,
             written_at=time.time(),
         )
-        with open(self._lineage_path(stage), "w") as f:
-            json.dump(lin.__dict__, f)
+        # the sidecar appears whole or not at all: a crash mid-dump must not
+        # leave a partial JSON that makes every later has() raise
+        tmp = f"{lp}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(lin.__dict__, f)
+            os.replace(tmp, lp)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
         self.stage_seconds[stage] = wall
         return out
 

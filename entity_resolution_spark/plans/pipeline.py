@@ -1,6 +1,7 @@
 """The end-to-end entity-resolution pipeline.
 
-Stage DAG (each stage optionally checkpointed, mirrors the reference's
+Stage DAG (each stage materialized — into a CheckpointStore or as a local
+checkpoint — mirrors the reference's
 load → extract → block → combine → store flow, ``README.md:113-122``):
 
   repo_files ──► features ──► block assignments ──► candidate pairs
@@ -19,6 +20,7 @@ it so the sha256 integrity invariant is auditable end-to-end (BASELINE.md).
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -192,34 +194,42 @@ def resolve(
 ) -> dict[str, DataFrame]:
     """Run the full pipeline; returns every stage DataFrame keyed by stage name.
 
-    With a ``CheckpointStore``, each stage is written (Iceberg-style) and re-read, and
-    a re-run after a crash resumes from the last completed stage (input-signature
-    guarded) — the reference's cache-resume pattern generalized.
+    Every stage comes back materialized, with no cache for the caller to
+    free. With a ``CheckpointStore``, each stage is written (Iceberg-style)
+    and re-read, and a re-run after a crash resumes from the last completed
+    stage — the reference's cache-resume pattern generalized. Resume does not
+    check the input or config: the signature is a constant, so a store
+    written for another corpus or ``PipelineConfig`` is reused as is. Without
+    a store, each stage is a local checkpoint (reclaimed by the
+    ContextCleaner). ``timings`` gets each stage's real cost in both modes.
     """
     cfg = cfg or PipelineConfig()
     sig = "v3"  # bumped when pipeline logic changes; a content hash at production scale
-    persisted: list = []  # intermediates to unpersist via release() — a long-lived
-    # session (streaming foreachBatch) would otherwise accumulate cached frames
 
     def stage(name: str, compute):
-        import time as _time
-
-        t0 = _time.monotonic()
-        if store is not None:
-            out = store.get_or_compute(name, compute, input_signature=sig)
-        else:
-            # no store: cache the stage so downstream actions don't recompute the DAG
-            out = compute().persist()
-            persisted.append(out)
+        # compute() appends what its operators cache to `caches`; all of it is
+        # unpersisted once the output is materialized (or the stage fails)
+        t0 = time.monotonic()
+        caches: list = []
+        try:
+            if store is not None:
+                out = store.get_or_compute(
+                    name, lambda: compute(caches), input_signature=sig
+                )
+            else:
+                out = compute(caches).localCheckpoint(eager=True)
+        finally:
+            for df in caches:
+                df.unpersist()
         if timings is not None:
-            timings[name] = round(_time.monotonic() - t0, 2)
+            timings[name] = round(time.monotonic() - t0, 2)
         return out
 
-    features = stage("features", lambda: extract_features(repo_files, cfg))
+    features = stage("features", lambda _: extract_features(repo_files, cfg))
     fi = surrogate_ids(features)
-    vectors = stage("vectors", lambda: pipeline_vectors(fi, persisted))
+    vectors = stage("vectors", lambda caches: pipeline_vectors(fi, caches))
     assignments = stage(
-        "assignments", lambda: block_assignments(fi, cfg.blocking, persisted=persisted)
+        "assignments", lambda caches: block_assignments(fi, cfg.blocking, persisted=caches)
     )
     # Drop candidate pairs whose two sides are byte-identical duplicates —
     # the exact family's star already carries their connectivity, so the wide
@@ -229,17 +239,18 @@ def resolve(
     # corpora pay ~nothing and a boilerplate-heavy web corpus saves O(n·cap)
     # wide rows per n-copy family.
     pairs = stage(
-        "candidate_pairs", lambda: drop_sha_covered_pairs(candidate_pairs(assignments), fi)
+        "candidate_pairs",
+        lambda _: drop_sha_covered_pairs(candidate_pairs(assignments), fi),
     )
 
-    def compute_edges():
+    def compute_edges(caches: list):
         block_sizes = bump_block_sizes(assignments, cfg)
         # block_n joins into the per-record feat frame and rides through the
         # scoring kernel; the splitter is a predicate on pair features already
         # computed (same_lang/exact) — the old post-scoring joins re-derived
         # both from fi at the cost of two broadcast builds per run
         pf = build_pair_features(
-            pairs, fi, vectors, persisted=persisted, block_sizes=block_sizes
+            pairs, fi, vectors, persisted=caches, block_sizes=block_sizes
         )
         # negative-evidence splitter (the reference's
         # DeleteNegativeEdgesSplitter, am_combiner/splitters/common.py:181-216):
@@ -252,13 +263,14 @@ def resolve(
 
     edges = stage("match_edges", compute_edges)
 
-    def compute_clusters():
+    def compute_clusters(caches: list):
         # connected_components, not label_components: the label joins below
         # are broadcast- or shuffle-hash-hinted by the label count, and the
         # representative is the min STRING id, not the min surrogate
         labels = connected_components(
             edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         ).persist()
+        caches.append(labels)
         # The labeling joins probe with rows carrying the 64-char string id +
         # sha; shuffling those across cores is the one clusters-stage cost
         # that GROWS with core count (sliver partitions of a small frame).
@@ -286,18 +298,13 @@ def resolve(
         # public min-member contract, independent of the int64 surrogates)
         reps = comp.groupBy("_comp").agg(F.min("unique_id_str").alias("cluster_rep"))
         reps = F.broadcast(reps) if broadcastable else reps.hint("shuffle_hash")
-        out = (
-            comp.join(reps, "_comp")
-            .select(
-                F.col("unique_id_str").alias("unique_id"),
-                "lang",
-                "content_sha",
-                "cluster_rep",
-                F.xxhash64("cluster_rep").alias("cluster_id"),
-            )
+        return comp.join(reps, "_comp").select(
+            F.col("unique_id_str").alias("unique_id"),
+            "lang",
+            "content_sha",
+            "cluster_rep",
+            F.xxhash64("cluster_rep").alias("cluster_id"),
         )
-        persisted.append(labels)
-        return out
 
     clusters = stage("clusters", compute_clusters)
     return {
@@ -307,20 +314,7 @@ def resolve(
         "pairs": pairs,
         "edges": edges,
         "clusters": clusters,
-        "_persisted": persisted,
     }
-
-
-def release(out: dict) -> None:
-    """Unpersist every frame a :func:`resolve` call cached (stage outputs and
-    internal intermediates). Call once downstream consumers are done — mandatory
-    in per-micro-batch use (streaming) where cached frames would otherwise
-    accumulate for the life of the session."""
-    for df in out.get("_persisted", []):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
 
 
 def audit_content_sha(repo_files: DataFrame, clusters: DataFrame) -> int:

@@ -700,21 +700,13 @@ def q_er_resolve_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The resolved cluster frame is memoized per session (shared with the
     ``er_resolve_f1_docs`` confusion-count gate; bench clears the memo per
     pass)."""
-    from entity_resolution_spark.plans.pipeline import PipelineConfig, release, resolve
-
-    out: dict = {}
+    from entity_resolution_spark.plans.pipeline import PipelineConfig, resolve
 
     def build():
-        out.update(
-            resolve(spark, _docs_repo_files(spark, sf_dir), PipelineConfig(shingle_k=3))
-        )
+        out = resolve(spark, _docs_repo_files(spark, sf_dir), PipelineConfig(shingle_k=3))
         return out["clusters"].select("unique_id", "lang", "content_sha", "cluster_id")
 
-    result = _session_memo(spark, ("er_clusters", sf_dir), build)
-    # release every frame the pipeline cached once the result is materialized —
-    # a bench/notebook session running many queries must not accumulate them
-    release(out)
-    return result
+    return _session_memo(spark, ("er_clusters", sf_dir), build)
 
 
 def q_er_resolve_docs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -731,7 +723,7 @@ def q_er_resolve_docs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle: cluster representative = min unique_id over (lang, sha256(text)).
     """
     from entity_resolution_spark.operators.blocking import BlockingConfig
-    from entity_resolution_spark.plans.pipeline import PipelineConfig, release, resolve
+    from entity_resolution_spark.plans.pipeline import PipelineConfig, resolve
 
     cfg = PipelineConfig(
         shingle_k=3,
@@ -740,13 +732,7 @@ def q_er_resolve_docs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     out = resolve(spark, _docs_repo_files(spark, sf_dir), cfg)
-    result = (
-        out["clusters"]
-        .select("unique_id", "lang", "content_sha", "cluster_rep")
-        .localCheckpoint(eager=True)
-    )
-    release(out)
-    return result
+    return out["clusters"].select("unique_id", "lang", "content_sha", "cluster_rep")
 
 
 SQL_ER_RESOLVE_DOCS_EXACT = """

@@ -125,7 +125,7 @@ def match_new_records_foreach_batch(
 
     def _body(batch_df: DataFrame, epoch_id: int) -> None:
         from entity_resolution_spark.functions.hashing import unique_id
-        from entity_resolution_spark.plans.pipeline import release, resolve
+        from entity_resolution_spark.plans.pipeline import resolve
 
         import os
         import shutil
@@ -155,7 +155,6 @@ def match_new_records_foreach_batch(
         )
         # materialize + cut lineage BEFORE touching the directory the plan reads
         snap = snap.localCheckpoint(eager=True)
-        release(out)
         # versioned write + retention: the new snapshot only becomes current
         # once its _SUCCESS lands; the previous version is pruned AFTER that,
         # so no failure mode can destroy the last good table

@@ -86,6 +86,58 @@ def test_resume_reproduces_identical_clusters(spark, tmp_path):
         assert json.load(f)["stage"] == "features"
 
 
+def test_resume_in_one_session_persists_no_cached_plan(spark, tmp_path, monkeypatch):
+    """A resume in the session that ran the cold pass recomputes its stages
+    from scratch: no frame the pipeline persists is already cached (the cold
+    run's stage caches were freed at their stage boundaries)."""
+    from entity_resolution_spark.plans.checkpoint import CheckpointStore
+    from entity_resolution_spark.plans.pipeline import PipelineConfig, resolve
+    from entity_resolution_spark.synth.generator import SynthConfig, corpus_dataframes
+
+    rf, _, _ = corpus_dataframes(spark, SynthConfig(seed=13, n_entities=15))
+    cls = type(rf)
+    persist = cls.persist
+    already_cached = []
+
+    def checked_persist(self, *args, **kwargs):
+        level = self.storageLevel
+        if level.useMemory or level.useDisk:
+            already_cached.append(self.columns)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", checked_persist)
+    root = str(tmp_path / "ck")
+    resolve(spark, rf, PipelineConfig(), store=CheckpointStore(spark, root))
+    for stage in ("match_edges", "clusters"):
+        shutil.rmtree(os.path.join(root, stage))
+        os.remove(os.path.join(root, f"{stage}._lineage.json"))
+    store = CheckpointStore(spark, root)
+    resolve(spark, rf, PipelineConfig(), store=store)
+    assert set(store.stage_seconds) == {"match_edges", "clusters"}
+    assert already_cached == []
+
+
+def test_interrupted_lineage_write_leaves_stage_absent(spark, tmp_path, monkeypatch):
+    """A sidecar write that dies mid-dump leaves no sidecar, so the next run
+    recomputes the stage instead of failing to parse a partial JSON file."""
+    import pytest
+
+    from entity_resolution_spark.plans import checkpoint
+
+    def dies_mid_dump(obj, f):
+        f.write('{"run_id": ')
+        raise OSError("interrupted")
+
+    root = str(tmp_path / "ck")
+    store = checkpoint.CheckpointStore(spark, root)
+    monkeypatch.setattr(checkpoint.json, "dump", dies_mid_dump)
+    with pytest.raises(OSError, match="interrupted"):
+        store.write("features", spark.range(3), input_signature="v3")
+    monkeypatch.undo()
+    assert not [n for n in os.listdir(root) if "_lineage" in n]
+    assert not store.has("features", input_signature="v3")
+
+
 def test_iceberg_backend_parity(spark, tmp_path):
     """Iceberg backend (north rule: "checkpointing ... to Iceberg"): with
     an Iceberg catalog passed as ``catalog=``, stage writes route through

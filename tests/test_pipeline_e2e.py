@@ -66,7 +66,7 @@ def test_boilerplate_family_emits_linear_pairs(spark):
     families are dropped before the wide probe (pairs.drop_sha_covered_pairs)."""
     from pyspark.sql import functions as F
 
-    from entity_resolution_spark.plans.pipeline import PipelineConfig, release, resolve
+    from entity_resolution_spark.plans.pipeline import PipelineConfig, resolve
 
     boiler = "mit license permission is hereby granted free of charge " * 5
     rows = [
@@ -90,7 +90,6 @@ def test_boilerplate_family_emits_linear_pairs(spark):
         .count()
     )
     n_clusters = out["clusters"].select("cluster_id").distinct().count()
-    release(out)
     assert fam == 1                      # whole family is one cluster
     assert n_clusters == 21              # 1 family + 20 singletons
     assert n_pairs < 300 * 4, n_pairs    # linear in family size, not n^2/cap
@@ -113,3 +112,13 @@ def test_bad_config_raises_when_built(build):
     """A bad config fails when it is built, before any Spark job runs."""
     with pytest.raises(ValueError):
         build()
+
+
+def test_resolve_without_store_leaves_no_cache(spark):
+    """Each stage frees the frames its operators cached once its output is
+    materialized, so a store-less resolve() leaves the session's cache empty."""
+    repo_files, _, _ = corpus_dataframes(spark, SynthConfig(seed=5, n_entities=15))
+    spark.catalog.clearCache()
+    out = resolve(spark, repo_files, PipelineConfig())
+    assert out["clusters"].count() == repo_files.count()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
